@@ -232,41 +232,19 @@ RATIO_BAND = (0.8, 1.25)
 # Result-front accounting (r12 verdict "Next round" #1): entries whose
 # DECLARED RESULT is itself a memoized front previously recorded a
 # warm best-of-N that timed a cache read (8–94 ms against 0.6–4.4 s
-# cold). Before EVERY timed run of such an entry — cold, warm repeats
-# and the outlier-pin sample alike — the bench now drops that entry's
-# OWN front (and only it: the shared amortized index structures that
-# other entries legitimately query, e.g. the IVF index or the LSH
-# band/pair fronts, stay warm), so every recorded number is
-# build+serve. Consumers that run later in the sweep still find the
-# front warm because the owner's LAST timed run leaves it built —
-# the shared-materialized-view story is unchanged; only the owner's
-# headline stops billing a dict lookup as query time. The values are
-# (cache_name, *key_match) tuples for session_cache.evict_named.
-_RESULT_FRONT_OWNERS: dict[str, tuple] = {
-    "sim_ann_join": (("ann_result",),),
-    "sim_knn_blocked_full": (("sim_stage", "knn_full_topk"),),
-    "ml_kmeans_fixed": (("km_assign",),),
-    "evt_survival_km": (("km_curve",),),
-    "dedup_passage_runs": (("passage_runs",),),
-    "graph_louvain_move": (("louvain_moved",),),
-    "merge_scd2": (("scd2", "all"),),
-    "ts_outlier_repair": (("ts_daily_fence",),),
-    "src_python_stream_source": (("pyss",),),
-    "dedup_connected_components": (("cc_labels",),),
-}
-
-# Same accounting rule for the three streaming entries that persist a
-# checkpoint per (application, sf_dir) and therefore take the
-# restart-RECOVERY path on warm repeats (zero batches, read state
-# back): their state/checkpoint/sink dirs are dropped before each
-# timed run so every recorded run re-processes the staged feed. The
-# feed STAGING itself (_prepare_input) stays memoized — it is input
-# fixturing, the analogue of the parquet dataset, not query work.
-_STREAM_STATE_OWNERS = (
-    "stream_dedup_lsh",
-    "stream_upsert_foreachbatch",
-    "stream_cdc_changelog",
-)
+# cold). Before EVERY timed run of every entry — cold, warm repeats
+# and the outlier-pin sample alike — the bench drops the fronts
+# that entry OWNS (session_cache.evict_owner; the owner is declared
+# where the front is built). The shared amortized index structures
+# other entries legitimately query (the IVF index, the LSH band/pair
+# fronts) and input fixtures have no owner and stay warm, so every
+# recorded number is build+serve. Consumers that run later in the
+# sweep still find an owner's front warm because the owner's LAST
+# timed run leaves it built. The same rule covers the streaming
+# entries that persist a checkpoint per (application, sf_dir) and
+# would otherwise take the restart-RECOVERY path on warm repeats:
+# streaming.windows.evict_stream_state drops their state dirs (and is
+# a no-op for every other entry), while the staged feed stays.
 
 
 def _force_gc(spark) -> None:
@@ -463,20 +441,10 @@ def main() -> None:
     # dedup/sim, multimodal, sinks), then evict the sf0.001 staged
     # fronts so the timed sweep starts with clean cache state.
     warm_dir = "/root/testdata/sf0.001"
-    for warm_op in HEADLINE:
-        try:
-            registry[warm_op].fn(spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:
-            pass  # warmup is best-effort; the sweep itself will report
+    warmup_errors = _warm_up(spark, registry, HEADLINE, warm_dir)
 
     from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
-        evict_named,
         evict_staged,
-    )
-    from pe_firm_investment_database_pipeline_spark.streaming.windows import (
-        evict_stream_state,
     )
 
     evict_staged()
@@ -506,61 +474,9 @@ def main() -> None:
     prev = _load_prev_bench()
     prev_queries = (prev or {}).get("queries", {})
 
-    def timed_run(fn) -> float:
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    timings: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    last_gc = time.monotonic()
-    for op_id in _full_headline():
-        # GC fence (untimed, guide §1 isolate-the-measurement): the
-        # sweep generates garbage (checkpoint blocks, broadcasts,
-        # shuffle files) far faster than a 16 g heap's organic old-gen
-        # GCs reclaim it, and the two observed failure modes are both
-        # measurement artifacts, not query cost: (a) no forced GC →
-        # uniform ~1.4x tail degradation as dead state accumulates
-        # (record A this round); (b) a periodic 2-min GC timer → the
-        # multi-second STW pauses land inside random entries' timed
-        # runs (record B: evt_bot_score 0.9→7.1 s, code untouched).
-        # Fencing BETWEEN entries every ~75 s bounds the garbage the
-        # same way while billing the pause to nobody. Timed action
-        # per entry is UNCHANGED.
-        if time.monotonic() - last_gc > 75:
-            _force_gc(spark)
-            # 1 s drain pause: empirically sufficient at sf0.1 (the
-            # r12 record chain shows no post-fence bleed at this
-            # figure); the cleaner queue here is one entry's worth of
-            # blocks, not the post-warmup 380-query backlog that the
-            # 2x-GC+4s quiesce above absorbs (ADVICE r12 note).
-            time.sleep(1.0)
-            last_gc = time.monotonic()
-        fn = registry[op_id].fn
-
-        # result-front accounting (see _RESULT_FRONT_OWNERS above):
-        # drop the entry's OWN memoized result/state before every
-        # timed sample, so cold ≈ warm ≈ build+serve for front owners
-        def run_once(op_id=op_id, fn=fn) -> float:
-            for spec in _RESULT_FRONT_OWNERS.get(op_id, ()):
-                evict_named(*spec)
-            if op_id in _STREAM_STATE_OWNERS:
-                evict_stream_state(spark, sf_dir, op_id)
-            return timed_run(fn)
-
-        # cold run: pays staging/index builds — excluded from the
-        # headline (see BENCH_NOTES r11 convention statement) but
-        # recorded under "cold_sec" for build-inclusive visibility
-        cold[op_id] = round(run_once(), 3)
-        best = run_once()  # first warm run — keys the repeat count
-        for _ in range(_runs_after_warm(best)):
-            best = min(best, run_once())
-        prev_t = prev_queries.get(op_id)
-        if prev_t and not (
-            RATIO_BAND[0] <= best / prev_t <= RATIO_BAND[1]
-        ):
-            best = min(best, run_once())  # outlier pin: one more sample
-        timings[op_id] = round(best, 3)
+    timings, cold, errors = _sweep(
+        spark, registry, _full_headline(), sf_dir, prev_queries
+    )
 
     total = round(sum(timings.values()), 3)
     out = {
@@ -574,6 +490,8 @@ def main() -> None:
         "calib_start": calib_start,
         "calib_end": _calibration_probe(spark),
         "cold_sec": cold,
+        "errors": errors,
+        "warmup_errors": warmup_errors,
     }
     if prev:
         out["prev_total"] = prev.get("value")
@@ -611,6 +529,93 @@ def main() -> None:
     evict_staged()
     print(json.dumps(out))
     spark.stop()
+
+
+def _error_text(exc: BaseException) -> str:
+    return f"{type(exc).__name__}: {exc}"[:2000]
+
+
+def _warm_up(spark, registry, ops, warm_dir: str) -> dict[str, str]:
+    """Untimed warm-up: run each of ``ops`` once at ``warm_dir``.
+    Returns {op: error text} for the entries that raised; the others
+    still run."""
+    errors: dict[str, str] = {}
+    for op in ops:
+        try:
+            registry[op].fn(spark, warm_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        except Exception as exc:
+            errors[op] = _error_text(exc)
+    return errors
+
+
+def _sweep(spark, registry, ops, sf_dir: str, prev_queries: dict):
+    """Times every entry of ``ops``: a recorded cold run, then best-of-N
+    warm runs (see RUNS). Returns (timings, cold, errors): an entry
+    that raises gets its error text in ``errors`` and no timing, and
+    the sweep carries on with the next entry."""
+    from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
+        evict_owner,
+    )
+    from pe_firm_investment_database_pipeline_spark.streaming.windows import (
+        evict_stream_state,
+    )
+
+    def run_once(op_id: str, fn) -> float:
+        # result-front accounting (see the note above _force_gc):
+        # drop the entry's OWN fronts and stream state before every
+        # timed sample, so cold ≈ warm ≈ build+serve for owners
+        evict_owner(op_id)
+        evict_stream_state(spark, sf_dir, op_id)
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+
+    timings: dict[str, float] = {}
+    cold: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    last_gc = time.monotonic()
+    for op_id in ops:
+        # GC fence (untimed, guide §1 isolate-the-measurement): the
+        # sweep generates garbage (checkpoint blocks, broadcasts,
+        # shuffle files) far faster than a 16 g heap's organic old-gen
+        # GCs reclaim it, and the two observed failure modes are both
+        # measurement artifacts, not query cost: (a) no forced GC →
+        # uniform ~1.4x tail degradation as dead state accumulates
+        # (record A this round); (b) a periodic 2-min GC timer → the
+        # multi-second STW pauses land inside random entries' timed
+        # runs (record B: evt_bot_score 0.9→7.1 s, code untouched).
+        # Fencing BETWEEN entries every ~75 s bounds the garbage the
+        # same way while billing the pause to nobody. Timed action
+        # per entry is UNCHANGED.
+        if time.monotonic() - last_gc > 75:
+            _force_gc(spark)
+            # 1 s drain pause: empirically sufficient at sf0.1 (the
+            # r12 record chain shows no post-fence bleed at this
+            # figure); the cleaner queue here is one entry's worth of
+            # blocks, not the post-warmup 380-query backlog that the
+            # 2x-GC+4s quiesce above absorbs (ADVICE r12 note).
+            time.sleep(1.0)
+            last_gc = time.monotonic()
+        fn = registry[op_id].fn
+        try:
+            # cold run: pays staging/index builds — excluded from the
+            # headline (see BENCH_NOTES r11 convention statement) but
+            # recorded under "cold_sec" for build-inclusive visibility
+            c = run_once(op_id, fn)
+            best = run_once(op_id, fn)  # first warm run — keys the repeat count
+            for _ in range(_runs_after_warm(best)):
+                best = min(best, run_once(op_id, fn))
+            prev_t = prev_queries.get(op_id)
+            if prev_t and not (RATIO_BAND[0] <= best / prev_t <= RATIO_BAND[1]):
+                best = min(best, run_once(op_id, fn))  # outlier pin: one more sample
+        except Exception as exc:  # one failing entry must not lose the record
+            errors[op_id] = _error_text(exc)
+            continue
+        cold[op_id] = round(c, 3)
+        timings[op_id] = round(best, 3)
+    return timings, cold, errors
 
 
 def _next_round() -> int:

@@ -78,7 +78,7 @@ def all_queries() -> dict[str, QuerySpec]:
         "sketch_kmv_distinct",
         # r12 in-round perf fix (slate checkpoints): re-verdict
         "rag_query_expansion",
-        # r12 in-round ANN-result front (similarity._ANN_RESULT_CACHE):
+        # r12 in-round ANN-result front ("ann_result" in similarity):
         # all four consumers' plans changed — re-verdict officially.
         "sim_ann_join",
         "rag_retrieve_docs",

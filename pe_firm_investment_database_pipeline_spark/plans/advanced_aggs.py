@@ -27,7 +27,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.exact import cents, qty_int
-from ..functions.session_cache import memoize, register_cache, staged_key
+from ..functions.session_cache import front
 from ..registry import QuerySpec
 from ..sources.tables import load_table
 from ..streaming.windows import GAP_S  # single source of truth for the gap
@@ -697,9 +697,6 @@ _KMV_M = 16**15
 # estimator + set algebra) and their exact twins read this frame;
 # per-call localCheckpoints re-ran the events distinct on every warm
 # invocation (~1.0 s of the old 1.6 s warm path at sf0.1).
-_KMV_HASHED_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
 def _kmv_hashed_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     return e.select(
@@ -713,9 +710,10 @@ def _kmv_hashed_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmv_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _KMV_HASHED_CACHE,
-        staged_key(spark, sf_dir, "kmv_hashed"),
+    return front(
+        spark,
+        sf_dir,
+        "kmv_hashed",
         lambda: _kmv_hashed_build(spark, sf_dir).localCheckpoint(eager=True),
     )
 
@@ -1847,9 +1845,6 @@ _BASKET_MIN_SUPPORT = 3
 # unstaged, each consumer re-runs the lineitem scan + distinct
 # shuffle. Production keeps baskets as a persisted co-occurrence
 # feed, so the staged shape is also the realistic one.
-_BASKETS_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
 def _brand_baskets_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The un-staged basket build: one broadcast join against the
     part dim, distinct-compressed to (order, brand). Kept separate
@@ -1865,9 +1860,10 @@ def _brand_baskets_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _brand_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _BASKETS_CACHE,
-        staged_key(spark, sf_dir, "brand_baskets"),
+    return front(
+        spark,
+        sf_dir,
+        "brand_baskets",
         lambda: _brand_baskets_build(spark, sf_dir).localCheckpoint(
             eager=True
         ),
@@ -2781,14 +2777,13 @@ def _km_curve_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lifetime frame twice each, and evt_ltv_expected integrates the
 # same curve again — unstaged, the whole product-limit pipeline
 # re-ran per consumer.
-_KM_CURVE_CACHE: dict[tuple, DataFrame] = register_cache({}, name="km_curve")
-
-
 def _km_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _KM_CURVE_CACHE,
-        staged_key(spark, sf_dir, "km_curve"),
+    return front(
+        spark,
+        sf_dir,
+        "km_curve",
         lambda: _km_curve_build(spark, sf_dir).localCheckpoint(eager=True),
+        owner="evt_survival_km",
     )
 
 
@@ -3150,9 +3145,6 @@ FROM long l JOIN bounds b ON l.col_name = b.col_name
 # staged per (application, dataset): the events scan + grid rollup +
 # two broadcast percentile passes otherwise re-run for every one of
 # the entry's five consumers of the flagged frame.
-_TS_FENCE_CACHE: dict[tuple, DataFrame] = register_cache({}, name="ts_daily_fence")
-
-
 def _ts_daily_fence_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The un-staged MAD-fence build: events grid rollup + two
     broadcast percentile passes. Kept separate from the memoizer so
@@ -3184,12 +3176,14 @@ def _ts_daily_fence_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ts_daily_fence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _TS_FENCE_CACHE,
-        staged_key(spark, sf_dir, "ts_daily_fence"),
+    return front(
+        spark,
+        sf_dir,
+        "ts_daily_fence",
         lambda: _ts_daily_fence_build(spark, sf_dir).localCheckpoint(
             eager=True
         ),
+        owner="ts_outlier_repair",
     )
 
 
@@ -8977,9 +8971,6 @@ FROM l2
 # FIRST-epoch events (day < the in-plan midpoint of the time axis),
 # memoized per (application, dataset) — the persisted aggregate a
 # production refresh reads from disk instead of recomputing.
-_IVM_BASE_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
 def _ivm_cutoff(e: DataFrame) -> DataFrame:
     return e.agg(
         F.expr("(min(day) + max(day)) div 2").alias("cut")
@@ -9008,9 +8999,10 @@ def _ivm_base_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivm_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _IVM_BASE_CACHE,
-        staged_key(spark, sf_dir, "ivm_base"),
+    return front(
+        spark,
+        sf_dir,
+        "ivm_base",
         lambda: _ivm_base_build(spark, sf_dir).localCheckpoint(eager=True),
     )
 
@@ -9289,9 +9281,6 @@ ORDER BY fold
 # ivm_join_delta — incremental maintenance of a JOIN view
 # ---------------------------------------------------------------------------
 
-_IVM_JOIN_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
 def _ivm_join_splits(spark: SparkSession, sf_dir: str):
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
@@ -9324,9 +9313,10 @@ def _ivm_join_base_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivm_join_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _IVM_JOIN_CACHE,
-        staged_key(spark, sf_dir, "ivm_join_base"),
+    return front(
+        spark,
+        sf_dir,
+        "ivm_join_base",
         lambda: _ivm_join_base_build(spark, sf_dir).localCheckpoint(
             eager=True
         ),

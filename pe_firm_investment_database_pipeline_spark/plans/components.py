@@ -31,25 +31,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.session_cache import memoize, register_cache, staged_key
+from ..functions.session_cache import front
 from ..registry import QuerySpec
 from ..sources.tables import load_table
 from .textops import _DEDUP_MINHASH_LSH_SQL, dedup_minhash_lsh
 
 MAX_ITERS = 20
-
-# Final component labels memoized per (applicationId, sf_dir): three
-# entries (components, canonical pick, and any cluster consumer) walk
-# the same fixpoint, and the labels frame is an EAGER localCheckpoint
-# — already materialized and lineage-free, so reuse is safe and the
-# iterative driver loop runs once per (session, dataset).
-_COMP_CACHE: dict[tuple, DataFrame] = register_cache({}, name="cc_labels")
-
-# Standing (pre-batch) labels for graph_cc_incremental — the
-# "persisted output of the last clustering run" that the incremental
-# entry joins new edges against.
-_OLD_LABELS_CACHE: dict[tuple, DataFrame] = register_cache({})
-
 
 
 # The graph family's shared edge front: near-dup candidate pairs at
@@ -61,13 +48,11 @@ _OLD_LABELS_CACHE: dict[tuple, DataFrame] = register_cache({})
 # makes every graph entry after the first start from a materialized,
 # lineage-free local frame (the staged-index policy similarity.py
 # already applies to its kNN frames).
-_LSH_PAIRS_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
 def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _LSH_PAIRS_CACHE,
-        staged_key(spark, sf_dir, "lsh_pairs"),
+    return front(
+        spark,
+        sf_dir,
+        "lsh_pairs",
         lambda: dedup_minhash_lsh(spark, sf_dir)
         .where(F.col("est_jaccard") >= 0.5)
         .localCheckpoint(eager=True),
@@ -135,11 +120,19 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster the MinHash-LSH candidate pairs (est_jaccard >= 0.5)
     into duplicate groups; emit one row per vertex with its cluster
-    id (= min doc_id in the cluster) and a keeper flag."""
-    comps = memoize(
-        _COMP_CACHE,
-        staged_key(spark, sf_dir),
+    id (= min doc_id in the cluster) and a keeper flag.
+
+    The final labels are a front: three entries (components, canonical
+    pick, and any cluster consumer) walk the same fixpoint, and the
+    labels frame is an EAGER localCheckpoint — already materialized
+    and lineage-free, so the iterative driver loop runs once per
+    (session, dataset)."""
+    comps = front(
+        spark,
+        sf_dir,
+        "cc_labels",
         lambda: connected_components(_lsh_pairs(spark, sf_dir), "doc1", "doc2"),
+        owner="dedup_connected_components",
     )
     return comps.select(
         F.col("v").alias("doc_id"),
@@ -286,12 +279,13 @@ def graph_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the standing label table IS the persisted output of the last
     # run — memoize it per (session, dataset) exactly like the full
-    # fixpoint's _COMP_CACHE, so repeated invocations time the
+    # fixpoint's "cc_labels" front, so repeated invocations time the
     # INCREMENTAL work, not a rebuild of state that production reads
     # from disk
-    old_labels = memoize(
-        _OLD_LABELS_CACHE,
-        staged_key(spark, sf_dir, "inc_old"),
+    old_labels = front(
+        spark,
+        sf_dir,
+        "inc_old",
         lambda: connected_components(old_pairs, "doc1", "doc2"),
     )
     new_verts = (
@@ -1670,9 +1664,6 @@ FROM a1s a FULL OUTER JOIN h1s h ON h.u = a.v
 # the registry's highest). Memoized per (applicationId, dataset
 # fingerprint) with an eager checkpoint, the same staged-front
 # discipline as _lsh_pairs itself (r11 verdict #4).
-_LOUVAIN_MOVED_CACHE: dict[tuple, DataFrame] = register_cache({}, name="louvain_moved")
-
-
 def _louvain_moved(spark: SparkSession, sf_dir: str):
     """Shared Louvain local-move body: returns (undirected edge
     frame, per-vertex (v, old_comm, comm) after one synchronous
@@ -1685,12 +1676,14 @@ def _louvain_moved(spark: SparkSession, sf_dir: str):
     e = pairs.select(
         F.least("doc1", "doc2").alias("a"), F.greatest("doc1", "doc2").alias("b")
     ).distinct()
-    moved = memoize(
-        _LOUVAIN_MOVED_CACHE,
-        staged_key(spark, sf_dir, "louvain_moved"),
+    moved = front(
+        spark,
+        sf_dir,
+        "louvain_moved",
         lambda: _louvain_moved_build(spark, sf_dir, e).localCheckpoint(
             eager=True
         ),
+        owner="graph_louvain_move",
     )
     return e, moved
 

@@ -1074,8 +1074,8 @@ def samp_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the result front landed, the lazy composition re-planned the
     # probe join per reference (38 parquet-scan nodes, 30 exchanges —
     # the rag_query_expansion double-execution class). sim_ann_join
-    # now returns the memoized eager checkpoint (similarity.
-    # _ANN_RESULT_CACHE), so all five references scan one
+    # now returns the memoized eager checkpoint (the "ann_result"
+    # front), so all five references scan one
     # materialized Q x k frame.
     ann = sim_ann_join(spark, sf_dir).select("query_id", "nbr_id", "nn_rank")
     pos = ann.where(F.col("nn_rank") <= 2).select(

@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.session_cache import memoize, register_cache, staged_key
+from ..functions.session_cache import front
 from ..registry import QuerySpec
 from ..sources.tables import load_table
 from .textops import _TOKENS, _TOKENS_DUCK
@@ -83,10 +83,6 @@ _IDX_BUCKETS = 32
 # serves exactly this persisted forward/inverted index. n_docs MUST
 # come from the raw corpus, never the front — zero-token documents
 # have no term rows but still count toward n_docs and avgdl.
-_TF_FRONT_CACHE: dict[tuple, DataFrame] = register_cache({})
-_CORPUS_STATS_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
 def _tf_front_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One corpus explode + one (doc, term) partial-agg shuffle —
     the only corpus-sized work in the module once staged."""
@@ -103,9 +99,10 @@ def _tf_front_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _tf_front(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _TF_FRONT_CACHE,
-        staged_key(spark, sf_dir, "tf_front"),
+    return front(
+        spark,
+        sf_dir,
+        "tf_front",
         lambda: _tf_front_build(spark, sf_dir).localCheckpoint(eager=True),
     )
 
@@ -121,9 +118,10 @@ def _corpus_stats_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _CORPUS_STATS_CACHE,
-        staged_key(spark, sf_dir, "corpus_stats"),
+    return front(
+        spark,
+        sf_dir,
+        "corpus_stats",
         lambda: _corpus_stats_build(spark, sf_dir).localCheckpoint(eager=True),
     )
 

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.session_cache import memoize, register_cache, staged_key
+from ..functions.session_cache import front
 from ..registry import QuerySpec
 from ..sources.tables import load_table
 from ..streaming.windows import GAP_S  # single source of truth for the gap
@@ -183,16 +183,20 @@ FROM nation
 # non-purchase update stream) stage their fronts under distinct
 # subset keys; the eager localCheckpoint makes every consumer after
 # the first start from a materialized, lineage-free local frame.
-_SCD2_CACHE: dict[tuple, DataFrame] = register_cache({}, name="scd2")
-
-
 def _scd2_front(
-    spark: SparkSession, sf_dir: str, subset: str, e: DataFrame
+    spark: SparkSession,
+    sf_dir: str,
+    subset: str,
+    e: DataFrame,
+    owner: str | None = None,
 ) -> DataFrame:
-    return memoize(
-        _SCD2_CACHE,
-        staged_key(spark, sf_dir, "scd2", subset),
+    return front(
+        spark,
+        sf_dir,
+        "scd2",
         lambda: _scd2_changes(e).localCheckpoint(eager=True),
+        subset,
+        owner=owner,
     )
 
 
@@ -246,6 +250,7 @@ def merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events").select(
             "user_id", "ts_us", "event_id", F.col("event_type").alias("state")
         ),
+        owner="merge_scd2",
     )
 
 

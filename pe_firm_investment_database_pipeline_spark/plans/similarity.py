@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.session_cache import memoize, register_cache, staged_key
+from ..functions.session_cache import front, staging_path
 from ..registry import QuerySpec
 from ..sources.tables import load_table
 
@@ -183,19 +183,26 @@ _NBITS_IVF = (
 # when CacheManager dedups the plans. Returning the SAME Python
 # DataFrame bounds live storage at one block set per (session, data
 # dir, index kind).
-_STAGE_CACHE: dict[tuple, DataFrame] = register_cache({}, name="sim_stage")
-
-
-def _staged(spark: SparkSession, key: tuple, build, src: DataFrame) -> DataFrame:
-    """Memoized persist. The cache key includes ``src``'s semantic
-    plan hash, not just the caller-chosen name: two callers that pass
-    the same stage key but DIFFERENT input frames (e.g. a test
-    planting duplicate vectors into the multiprobe corpus) must never
-    silently share a staged index — same name + same logical plan is
-    the only thing that hits."""
-    app = spark.sparkContext.applicationId
-    full_key = (app, *key, src.semanticHash())
-    return memoize(_STAGE_CACHE, full_key, lambda: build().persist())
+def _staged(
+    spark: SparkSession, key: tuple, build, src: DataFrame, owner: str | None = None
+) -> DataFrame:
+    """Memoized persist, a "sim_stage" front. ``key`` is (sf_dir,
+    *kind); the front key adds ``src``'s semantic plan hash, not just
+    the caller-chosen name: two callers that pass the same stage key
+    but DIFFERENT input frames (e.g. a test planting duplicate vectors
+    into the multiprobe corpus) must never silently share a staged
+    index — same name + same logical plan is the only thing that
+    hits."""
+    sf_dir, *kind = key
+    return front(
+        spark,
+        sf_dir,
+        "sim_stage",
+        lambda: build().persist(),
+        *kind,
+        src.semanticHash(),
+        owner=owner,
+    )
 
 
 def _celled(
@@ -450,7 +457,9 @@ def sim_knn_blocked_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = _celled(src, _NBITS_PAIR, stage_key=(sf_dir, "knn_full_sigs"))
         return _knn_pairs_topk(emb)
 
-    return _staged(spark, (sf_dir, "knn_full_topk"), build, src)
+    return _staged(
+        spark, (sf_dir, "knn_full_topk"), build, src, owner="sim_knn_blocked_full"
+    )
 
 
 _SIM_KNN_BLOCKED_SQL = f"""
@@ -952,9 +961,6 @@ def _ann_join_result_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # consumer re-planned the probe join + top-k window per reference.
 # The frame is Q x k (~queries are a fixed 1% sample), tiny at any
 # SF; one eager localCheckpoint per (app, dataset) serves them all.
-_ANN_RESULT_CACHE: dict[tuple, DataFrame] = register_cache({}, name="ann_result")
-
-
 def sim_ann_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN join (Q queries x corpus top-k): the query relation (every
     100th vector) retrieves its top-5 corpus neighbors through the
@@ -962,15 +968,17 @@ def sim_ann_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     that the self-join ANN entries don't cover. Shares the staged IVF
     index with `sim_ivf_multiprobe` via the same stage key, so running
     both builds the index once; the top-k RESULT is itself a memoized
-    front (see _ANN_RESULT_CACHE) serving this entry plus the three
+    front ("ann_result") serving this entry plus the three
     downstream consumers. Recall >= 0.9 on planted neighbors is
     pinned by tests/test_scale_blocking.py::test_ann_join_recall."""
-    return memoize(
-        _ANN_RESULT_CACHE,
-        staged_key(spark, sf_dir, "annjoin-result"),
+    return front(
+        spark,
+        sf_dir,
+        "ann_result",
         lambda: _ann_join_result_build(spark, sf_dir).localCheckpoint(
             eager=True
         ),
+        owner="sim_ann_join",
     )
 
 
@@ -1358,51 +1366,44 @@ LIMIT 10
 # entry is session-scoped (in-memory catalog), so a fresh session
 # rebuilds from the current fixture — no stale-index hazard.
 _ANN_INDEX_BUCKETS = 8
-_ANN_INDEX_CACHE: dict[tuple, tuple[str, str]] = {}
 
 
 def _ivf_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Build (once per session+sf_dir) the persisted IVF index:
+    """The persisted IVF index, built once per session+dataset:
     returns (centroids_table, postings_table)."""
-    import hashlib
     import os
-    import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _ANN_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    slot = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    app = spark.sparkContext.applicationId.replace(":", "_").replace("/", "_")
-    cents_name = f"ivf_cents_{slot}"
-    post_name = f"ivf_postings_{slot}"
-    emb, cents, ranked = _ivf_index(_emb_q(spark, sf_dir), stage_key=(sf_dir, "ivf"))
-    spark.sql(f"DROP TABLE IF EXISTS {cents_name}")
-    spark.sql(f"DROP TABLE IF EXISTS {post_name}")
-    (
-        cents.write.format("parquet")
-        .option("path", os.path.join(tempfile.gettempdir(), f"pe_ivf_cents_{slot}_{app}"))
-        .mode("overwrite")
-        .saveAsTable(cents_name)
-    )
-    (
-        ranked.where(F.col("crank") == 1)
-        .select(
-            F.col("vec_id").alias("nbr_id"),
-            F.col("label").alias("nbr_label"),
-            F.col("q").alias("qb"),
-            F.col("nrm").alias("nb"),
-            F.col("cent_id").alias("cell"),
+    def build() -> tuple[str, str]:
+        cents_name = os.path.basename(staging_path(None, sf_dir, "ivf_cents"))
+        post_name = os.path.basename(staging_path(None, sf_dir, "ivf_postings"))
+        emb, cents, ranked = _ivf_index(_emb_q(spark, sf_dir), stage_key=(sf_dir, "ivf"))
+        spark.sql(f"DROP TABLE IF EXISTS {cents_name}")
+        spark.sql(f"DROP TABLE IF EXISTS {post_name}")
+        (
+            cents.write.format("parquet")
+            .option("path", staging_path(spark, sf_dir, "ivf_cents"))
+            .mode("overwrite")
+            .saveAsTable(cents_name)
         )
-        .write.format("parquet")
-        .bucketBy(_ANN_INDEX_BUCKETS, "cell")
-        .sortBy("cell")
-        .option("path", os.path.join(tempfile.gettempdir(), f"pe_ivf_post_{slot}_{app}"))
-        .mode("overwrite")
-        .saveAsTable(post_name)
-    )
-    _ANN_INDEX_CACHE[key] = (cents_name, post_name)
-    return cents_name, post_name
+        (
+            ranked.where(F.col("crank") == 1)
+            .select(
+                F.col("vec_id").alias("nbr_id"),
+                F.col("label").alias("nbr_label"),
+                F.col("q").alias("qb"),
+                F.col("nrm").alias("nb"),
+                F.col("cent_id").alias("cell"),
+            )
+            .write.format("parquet")
+            .bucketBy(_ANN_INDEX_BUCKETS, "cell")
+            .sortBy("cell")
+            .option("path", staging_path(spark, sf_dir, "ivf_post"))
+            .mode("overwrite")
+            .saveAsTable(post_name)
+        )
+        return cents_name, post_name
+
+    return front(spark, sf_dir, "ivf_index", build)
 
 
 def sim_ann_join_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1686,14 +1687,13 @@ def _km_assign_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unrolled iteration per consumer. Production persists the
 # assignment as the clustering artifact, so the staged shape is the
 # realistic one.
-_KM_ASSIGN_CACHE: dict[tuple, DataFrame] = register_cache({}, name="km_assign")
-
-
 def _km_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _KM_ASSIGN_CACHE,
-        staged_key(spark, sf_dir, "km_assign"),
+    return front(
+        spark,
+        sf_dir,
+        "km_assign",
         lambda: _km_assign_build(spark, sf_dir).localCheckpoint(eager=True),
+        owner="ml_kmeans_fixed",
     )
 
 

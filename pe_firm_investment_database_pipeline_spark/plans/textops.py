@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.session_cache import memoize, register_cache, staged_key
+from ..functions.session_cache import front, staging_path
 from ..registry import QuerySpec
 from ..sources.tables import load_table
 
@@ -73,9 +73,6 @@ _SH_HASH_DUCK = (
 # pairs, signatures) and would otherwise recompute the regexp+md5
 # chain per consumer. On a cluster this intermediate is a cached or
 # bucketed table — the standard shape for multi-consumer pipelines.
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
 def _shingled_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return d.select("doc_id", F.expr(_TOKENS).alias("toks")).select(
@@ -91,9 +88,10 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes (guard: docs with < 3 tokens yield an empty set),
     materialized once per (session, dataset) — see
     session_cache.staged_key for the key discipline."""
-    return memoize(
-        _SHINGLE_CACHE,
-        staged_key(spark, sf_dir),
+    return front(
+        spark,
+        sf_dir,
+        "shingles",
         lambda: _shingled_build(spark, sf_dir).localCheckpoint(eager=True),
     )
 
@@ -522,15 +520,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the second consumer reads the staged pairs instead of re-running
 # the explode + three shuffles. On a cluster this intermediate is the
 # natural cached/bucketed 'candidate pairs' table.
-_SHARED_COUNTS_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
 def _shared_counts_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         sh = _shingled(spark, sf_dir).select("doc_id", F.explode("sh").alias("s"))
         return _shared_shingle_counts(sh).persist()
 
-    return memoize(_SHARED_COUNTS_CACHE, staged_key(spark, sf_dir), build)
+    return front(spark, sf_dir, "shared_counts", build)
 
 
 def _jaccard_pairs_from_shingles(sh: DataFrame) -> DataFrame:
@@ -693,9 +688,6 @@ FROM scored WHERE containment >= {_CONTAINMENT_T}
 # prefix-inverted index; here the candidate join consumes the SAME
 # frame on both sides, and unstaged Catalyst re-evaluates the
 # df-count groupBy + join + two windows per side.
-_PREFIX_INDEX_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
 def _prefix_index_build(sh_arr: DataFrame) -> DataFrame:
     sh = sh_arr.select("doc_id", F.explode("sh").alias("s"))
     df_counts = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
@@ -713,9 +705,10 @@ def _prefix_index_build(sh_arr: DataFrame) -> DataFrame:
 def _prefix_index(
     spark: SparkSession, sf_dir: str, sh_arr: DataFrame
 ) -> DataFrame:
-    return memoize(
-        _PREFIX_INDEX_CACHE,
-        staged_key(spark, sf_dir, "prefix_index"),
+    return front(
+        spark,
+        sf_dir,
+        "prefix_index",
         lambda: _prefix_index_build(sh_arr).localCheckpoint(eager=True),
     )
 
@@ -944,45 +937,37 @@ JOIN sigs s2 ON doc2 = s2.doc_id
 # column so bucketing on one column covers the whole collision key.
 
 _LSH_INDEX_BUCKETS = 8
-_LSH_INDEX_CACHE: dict[tuple, str] = {}
 
 
 def _lsh_index_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per session+sf_dir) the persisted bucketed MinHash
+    """Build (once per session+dataset) the persisted bucketed MinHash
     band index of the standing corpus; returns the table name. Data
     lands under tmp via an explicit path (never the process cwd);
     the catalog entry is session-scoped, so a fresh session rebuilds
     from the current fixture (no stale-index hazard across testdata
     regenerations)."""
-    import hashlib
     import os
-    import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LSH_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    slot = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    app = spark.sparkContext.applicationId.replace(":", "_").replace("/", "_")
-    name = f"lsh_band_index_{slot}"
-    path = os.path.join(tempfile.gettempdir(), f"pe_lsh_index_{slot}_{app}")
-    corpus = _minhash_sigs(spark, sf_dir).where(F.col("doc_id") % 10 != 0)
-    bands = _minhash_bands(corpus).select(
-        "doc_id",
-        "sig",
-        F.concat_ws(":", F.col("band"), F.col("bkey")).alias("ikey"),
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    (
-        bands.write.format("parquet")
-        .bucketBy(_LSH_INDEX_BUCKETS, "ikey")
-        .sortBy("ikey")
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(name)
-    )
-    _LSH_INDEX_CACHE[key] = name
-    return name
+    def build() -> str:
+        name = os.path.basename(staging_path(None, sf_dir, "lsh_band_index"))
+        corpus = _minhash_sigs(spark, sf_dir).where(F.col("doc_id") % 10 != 0)
+        bands = _minhash_bands(corpus).select(
+            "doc_id",
+            "sig",
+            F.concat_ws(":", F.col("band"), F.col("bkey")).alias("ikey"),
+        )
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        (
+            bands.write.format("parquet")
+            .bucketBy(_LSH_INDEX_BUCKETS, "ikey")
+            .sortBy("ikey")
+            .option("path", staging_path(spark, sf_dir, "lsh_index"))
+            .mode("overwrite")
+            .saveAsTable(name)
+        )
+        return name
+
+    return front(spark, sf_dir, "lsh_index", build)
 
 
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1119,9 +1104,6 @@ _HAMMING4_DUCK = (
 # join consumes the SAME frame on both sides — unstaged, Catalyst
 # re-evaluates the fold per side (and dedup_method_compare pays it
 # again). Production reads signatures from a persisted index.
-_SIMHASH_BANDS_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
 def _simhash_bands_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     sigs = (
@@ -1152,9 +1134,10 @@ def _simhash_bands_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _SIMHASH_BANDS_CACHE,
-        staged_key(spark, sf_dir, "simhash_bands"),
+    return front(
+        spark,
+        sf_dir,
+        "simhash_bands",
         lambda: _simhash_bands_build(spark, sf_dir).localCheckpoint(eager=True),
     )
 
@@ -1529,9 +1512,6 @@ _RAKE_TOP = 15
 # staged per (application, dataset): the corpus posexplode + per-doc
 # stopword-run window otherwise re-runs for each consumer (word
 # stats, phrase scores).
-_RAKE_WORDS_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
 def _rake_words_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
@@ -1555,9 +1535,10 @@ def _rake_words_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rake_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _RAKE_WORDS_CACHE,
-        staged_key(spark, sf_dir, "rake_words"),
+    return front(
+        spark,
+        sf_dir,
+        "rake_words",
         lambda: _rake_words_build(spark, sf_dir).localCheckpoint(eager=True),
     )
 
@@ -1666,9 +1647,6 @@ _PMI_CID = 100000
 # (window count, token document frequencies, and both sides of the
 # in-window pair self-join) — unstaged, each consumer re-ran the
 # corpus posexplode + distinct.
-_PMI_WINDOWS_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
 def _pmi_windows_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     words = d.select(
@@ -1681,9 +1659,10 @@ def _pmi_windows_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pmi_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _PMI_WINDOWS_CACHE,
-        staged_key(spark, sf_dir, "pmi_windows"),
+    return front(
+        spark,
+        sf_dir,
+        "pmi_windows",
         lambda: _pmi_windows_build(spark, sf_dir).localCheckpoint(eager=True),
     )
 
@@ -2935,9 +2914,6 @@ _TR_TOPK = 15
 # localCheckpoint — every warm invocation rebuilt the corpus
 # posexplode + lag window; memoizing follows the staged-front policy
 # (warm runs start from the materialized vocabulary-sized graph).
-_TEXTRANK_EDGES_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
 def _textrank_edges_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = (
@@ -2957,9 +2933,10 @@ def _textrank_edges_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _textrank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _TEXTRANK_EDGES_CACHE,
-        staged_key(spark, sf_dir, "textrank_edges"),
+    return front(
+        spark,
+        sf_dir,
+        "textrank_edges",
         lambda: _textrank_edges_build(spark, sf_dir).localCheckpoint(
             eager=True
         ),
@@ -3608,9 +3585,6 @@ FROM pred GROUP BY lang_actual, best.c
 # samp_dsir_importance both train unigram LMs over exactly this
 # frame; unstaged, each warm run re-ran the corpus explode + tf
 # shuffle (retrieval._tf_front is the lang-free BM25 sibling).
-_TF_LANG_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
 def _tf_lang_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
@@ -3624,9 +3598,10 @@ def _tf_lang_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _tf_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _TF_LANG_CACHE,
-        staged_key(spark, sf_dir, "tf_lang"),
+    return front(
+        spark,
+        sf_dir,
+        "tf_lang",
         lambda: _tf_lang_build(spark, sf_dir).localCheckpoint(eager=True),
     )
 
@@ -3770,16 +3745,15 @@ _PASSAGE_MIN_TOKENS = 12
 # twice). The frame is one row per detected >= 12-token shared run —
 # duplicate-evidence-sized, never corpus-sized — so an eager
 # localCheckpoint per (app, dataset) serves both entries.
-_PASSAGE_RUNS_CACHE: dict[tuple, DataFrame] = register_cache({}, name="passage_runs")
-
-
 def _passage_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoize(
-        _PASSAGE_RUNS_CACHE,
-        staged_key(spark, sf_dir, "passage_runs"),
+    return front(
+        spark,
+        sf_dir,
+        "passage_runs",
         lambda: _passage_runs_build(spark, sf_dir).localCheckpoint(
             eager=True
         ),
+        owner="dedup_passage_runs",
     )
 
 

@@ -188,8 +188,8 @@ def test_ann_join_broadcasts_centroids(spark):
     ~sqrt(N) centroid relation (never shuffle the corpus for it), and
     candidate pairing must stay equi-join (no CartesianProduct of
     data rows). Asserted on the BUILDER (_ann_join_result_build):
-    the registry entry serves the memoized eager checkpoint
-    (_ANN_RESULT_CACHE) — a lineage-free scan (pinned below)."""
+    the registry entry serves the memoized eager checkpoint (the
+    "ann_result" front) — a lineage-free scan (pinned below)."""
     import io
     from contextlib import redirect_stdout
 

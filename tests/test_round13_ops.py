@@ -106,28 +106,29 @@ def test_stream_input_staged_as_four_files(spark):
 
 
 def test_evict_named_targets_one_cache(spark):
-    """evict_named must drop only the named cache's (matching)
-    entries: after sim_ann_join builds its result front, evicting
+    """evict_named must drop only the named family's (matching)
+    fronts: after sim_ann_join builds its result front, evicting
     "ann_result" clears it while the staged IVF index (sim_stage)
-    keeps its entries — the owner rebuilds, consumers stay warm."""
+    keeps its fronts — the owner rebuilds, consumers stay warm."""
     from pe_firm_investment_database_pipeline_spark.functions import (
         session_cache as SC,
     )
     from pe_firm_investment_database_pipeline_spark.plans.similarity import (
-        _ANN_RESULT_CACHE,
-        _STAGE_CACHE,
         sim_ann_join,
     )
 
+    def n_fronts(name):
+        return sum(1 for k in SC._FRONTS if k[3] == name)
+
     sf = "/root/testdata/sf0.001"
     sim_ann_join(spark, sf).count()
-    assert _ANN_RESULT_CACHE
-    n_stage = len(_STAGE_CACHE)
+    assert n_fronts("ann_result")
+    n_stage = n_fronts("sim_stage")
     assert n_stage > 0
     n = SC.evict_named("ann_result")
     assert n >= 1
-    assert not _ANN_RESULT_CACHE
-    assert len(_STAGE_CACHE) == n_stage  # untouched
+    assert not n_fronts("ann_result")
+    assert n_fronts("sim_stage") == n_stage  # untouched
     # unknown names are a no-op, not an error
     assert SC.evict_named("no_such_cache") == 0
     # rebuild works and matches

@@ -419,7 +419,7 @@ def test_candidate_joins_are_equi_not_cross(spark, sf_dir, op_id):
     BroadcastNestedLoopJoin — the 1-row nbits scalar glued onto the
     scan — which is fine; a CartesianProduct of data rows is not.)
     sim_ann_join is asserted on its BUILDER: the registry entry
-    serves the memoized result checkpoint (_ANN_RESULT_CACHE), whose
+    serves the memoized result checkpoint (the "ann_result" front), whose
     plan is a lineage-free RDD scan with no joins at all."""
     if op_id == "sim_ann_join":
         import io

@@ -231,8 +231,9 @@ def test_stream_parquet_sink_exactly_once(spark):
     availableNow run over the same input and checkpoint commits no new
     files, so the read-back aggregate is identical — and the output
     directory is physically partitioned by the epoch-day column."""
-    import tempfile
-
+    from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
+        staging_path,
+    )
     from pe_firm_investment_database_pipeline_spark.streaming import windows as SW
 
     sf = "/root/testdata/sf0.001"
@@ -245,9 +246,7 @@ def test_stream_parquet_sink_exactly_once(spark):
         for r in SW.snk_stream_parquet(spark, sf).collect()
     }
     assert r1 and r1 == r2
-    out = os.path.join(
-        tempfile.gettempdir(), f"pe_stream_sink_{SW._slot(spark, sf)}"
-    )
+    out = staging_path(spark, sf, "stream_sink")
     assert any(d.startswith("day=") for d in os.listdir(out))
 
 
@@ -258,8 +257,9 @@ def test_stream_dedup_lsh_multibatch_and_idempotent(spark):
     extra steps), (b) equal its batch twin dedup_incremental_lsh
     exactly, and (c) be idempotent under re-run with the same
     checkpoint (exactly-once sink: no duplicated pairs)."""
-    import tempfile
-
+    from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
+        staging_path,
+    )
     from pe_firm_investment_database_pipeline_spark.plans import textops
     from pe_firm_investment_database_pipeline_spark.streaming import windows as SW
 
@@ -274,9 +274,7 @@ def test_stream_dedup_lsh_multibatch_and_idempotent(spark):
     }
     assert streamed == batch and streamed
     # multiple micro-batches: the checkpoint's offset log has >1 entry
-    ck = os.path.join(
-        tempfile.gettempdir(), f"pe_stream_lshdedup_ck_{SW._slot(spark, sf)}"
-    )
+    ck = staging_path(spark, sf, "stream_lshdedup_ck")
     offsets = [f for f in os.listdir(os.path.join(ck, "offsets")) if f.isdigit()]
     assert len(offsets) > 1, f"expected >1 micro-batch, got {sorted(offsets)}"
     # idempotent re-run: same checkpoint, nothing new processed
@@ -399,3 +397,28 @@ def test_stateful_ops_run_on_rocksdb_backend(spark):
         else:
             spark.conf.set(conf, prev)
     assert rocksdb == baseline
+
+
+def test_python_stream_source_drops_its_sink_view(spark):
+    """src_python_stream_source reads its memory sink into the
+    checkpointed aggregate and then drops the sink's temp view: after
+    two rebuilds (the "pyss" front evicted between them) the catalog
+    holds no pe_pyss_* view, and both builds return the full feed."""
+    from __spark_entry__ import SF0001
+
+    from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
+        evict_named,
+    )
+    from pe_firm_investment_database_pipeline_spark.plans.io_ops import (
+        _PYSS_N,
+        src_python_stream_source,
+    )
+
+    evict_named("pyss")
+    first = src_python_stream_source(spark, SF0001).collect()
+    evict_named("pyss")
+    second = src_python_stream_source(spark, SF0001).collect()
+    assert sorted(first) == sorted(second)
+    assert sum(r["n"] for r in first) == _PYSS_N
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("pe_pyss_")]
+    assert views == []
