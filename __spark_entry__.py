@@ -44,9 +44,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI-SQL twin for each SQL-expressible query."""
-    return {
-        op_id: spec.oracle
-        for op_id, spec in all_queries().items()
-        if spec.oracle is not None
-    }
+    """DuckDB-runnable ANSI-SQL twin for each query."""
+    return {op_id: spec.oracle for op_id, spec in all_queries().items()}

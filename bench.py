@@ -295,6 +295,12 @@ _SCALING_OPS = [
 ]
 
 
+def _noop(df) -> None:
+    """Force ``df`` end-to-end through the noop sink (full computation,
+    no driver collect)."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 def _scaling_worker(sf_dir: str) -> None:
     """Child process: time _SCALING_OPS at $SPARK_GRAFT_CPUS against
     ``sf_dir`` (cold discarded, best-of-2 warm — the sweep convention)
@@ -307,7 +313,7 @@ def _scaling_worker(sf_dir: str) -> None:
 
         def one() -> float:
             t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            _noop(fn(spark, sf_dir))
             return time.perf_counter() - t0
 
         c = one()
@@ -404,9 +410,9 @@ def _calibration_probe(spark=None) -> dict:
     out = {"cpu_hash_sec": round(time.perf_counter() - t0, 4)}
     if spark is not None:
         t0 = time.perf_counter()
-        spark.read.parquet(
+        _noop(spark.read.parquet(
             "/root/testdata/sf0.001/lineitem.parquet"
-        ).write.format("noop").mode("overwrite").save()
+        ))
         out["parquet_scan_sec"] = round(time.perf_counter() - t0, 4)
     return out
 
@@ -452,9 +458,7 @@ def main() -> None:
     # footer reads): the first timed entry otherwise pays the cold
     # filesystem once per session, which the old uniform best-of-3
     # hid in its discarded first run
-    registry["flagship_revenue_by_nation"].fn(spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    _noop(registry["flagship_revenue_by_nation"].fn(spark, sf_dir))
 
     # Quiesce before the timed sweep: the full-cohort warmup leaves
     # ~380 queries' worth of dereferenced checkpoint RDDs, broadcasts
@@ -542,9 +546,7 @@ def _warm_up(spark, registry, ops, warm_dir: str) -> dict[str, str]:
     errors: dict[str, str] = {}
     for op in ops:
         try:
-            registry[op].fn(spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            _noop(registry[op].fn(spark, warm_dir))
         except Exception as exc:
             errors[op] = _error_text(exc)
     return errors
@@ -569,7 +571,7 @@ def _sweep(spark, registry, ops, sf_dir: str, prev_queries: dict):
         evict_owner(op_id)
         evict_stream_state(spark, sf_dir, op_id)
         t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        _noop(fn(spark, sf_dir))
         return time.perf_counter() - t0
 
     timings: dict[str, float] = {}

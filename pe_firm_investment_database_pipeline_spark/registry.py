@@ -18,16 +18,13 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 @dataclass(frozen=True)
 class QuerySpec:
-    """A named query: the PySpark plan plus (optionally) its ANSI-SQL
-    twin that DuckDB runs on the same parquet tables.
-
-    ``oracle is None`` marks a genuinely non-SQL-expressible operator
-    (streaming, iterative, I/O) — the driver then records a weaker
-    rows-only check (repo:__spark_entry__.py docstring).
-    """
+    """A named query: the PySpark plan plus its ANSI-SQL twin that
+    DuckDB runs on the same parquet tables. Every entry has one: the
+    driver compares the two results under its strict cell canon
+    (repo:tools/driver_sim.py)."""
 
     fn: QueryFn
-    oracle: str | None = None
+    oracle: str
     tags: tuple[str, ...] = field(default=())
 
 

@@ -21,12 +21,18 @@ import tempfile
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> int:
+    """Cores of the ``local[N]`` master: $SPARK_GRAFT_CPUS, else the
+    host's core count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
+
+
 def get_spark(
     app_name: str = "pe-pipeline-spark",
     shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
+    cpus = local_cpus()
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
     )

@@ -106,7 +106,7 @@ def test_events_loader_handles_every_physical_type(
     # ENGINE PARITY for the tz-annotated branch: DuckDB reads a
     # tz-annotated column as TIMESTAMPTZ and ts::TIMESTAMP converts
     # through its TimeZone setting — with the oracle zone pinned to
-    # UTC (as tests/harness.duckdb_conn does) both engines must yield
+    # UTC (as tools/driver_sim.oracle_conn does) both engines must yield
     # identical epoch micros. An unpinned non-UTC host would shift
     # this branch by the zone offset.
     con = duckdb.connect()

@@ -25,11 +25,9 @@ import pytest
 from pyspark.sql import types as T
 
 from pe_firm_investment_database_pipeline_spark.plans import all_queries
-
-from .harness import duckdb_conn
+from tools.driver_sim import oracle_conn
 
 _QUERIES = all_queries()
-_WITH_ORACLE = sorted(op for op, spec in _QUERIES.items() if spec.oracle)
 
 # DuckDB declared types that pandas materializes as exact integers.
 _DUCK_INTEGRAL = {
@@ -50,12 +48,12 @@ def _duck_is_floaty(t: str) -> bool:
 
 @pytest.fixture(scope="module")
 def con(sf_dir):
-    c = duckdb_conn(sf_dir)
+    c = oracle_conn(sf_dir)
     yield c
     c.close()
 
 
-@pytest.mark.parametrize("op_id", _WITH_ORACLE)
+@pytest.mark.parametrize("op_id", sorted(_QUERIES))
 def test_oracle_dtype_parity(spark, sf_dir, con, op_id):
     spec = _QUERIES[op_id]
     duck = {

@@ -1,38 +1,28 @@
-"""Oracle-parity tests: every SQL-expressible query in the registry
-must match its DuckDB twin (the driver's exact gate at sf=0.01)."""
+"""Oracle-parity tests: every query in the registry must match its
+DuckDB twin under the driver's strict cell canon (the driver's exact
+gate at sf=0.01)."""
 
 from __future__ import annotations
 
 import pytest
 
 from pe_firm_investment_database_pipeline_spark.plans import all_queries
-
-from .harness import compare, duckdb_conn
+from tools.driver_sim import check, oracle_conn
 
 _QUERIES = all_queries()
-_WITH_ORACLE = sorted(op for op, spec in _QUERIES.items() if spec.oracle)
-_ROWS_ONLY = sorted(op for op, spec in _QUERIES.items() if spec.oracle is None)
 
 
 @pytest.fixture(scope="module")
 def con(sf_dir):
-    c = duckdb_conn(sf_dir)
+    c = oracle_conn(sf_dir)
     yield c
     c.close()
 
 
-@pytest.mark.parametrize("op_id", _WITH_ORACLE)
+@pytest.mark.parametrize("op_id", sorted(_QUERIES))
 def test_oracle_parity(spark, sf_dir, con, op_id):
     spec = _QUERIES[op_id]
-    compare(spec.fn(spark, sf_dir), con, spec.oracle, op_id)
-
-
-@pytest.mark.parametrize("op_id", _ROWS_ONLY)
-def test_rows_only_runs(spark, sf_dir, op_id):
-    spec = _QUERIES[op_id]
-    df = spec.fn(spark, sf_dir)
-    assert len(df.columns) > 0
-    assert df.count() >= 0
+    check(op_id, spec.fn(spark, sf_dir).toPandas(), con.sql(spec.oracle).df())
 
 
 def test_entry_smoke(spark):

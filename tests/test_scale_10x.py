@@ -37,8 +37,7 @@ import duckdb
 import pytest
 
 from pe_firm_investment_database_pipeline_spark.plans import all_queries
-
-from .harness import compare, duckdb_conn
+from tools.driver_sim import check, oracle_conn
 
 pytestmark = [
     pytest.mark.scale,
@@ -354,7 +353,9 @@ def scale_dir() -> str:
 
 @pytest.fixture(scope="module")
 def con_scale(scale_dir):
-    return duckdb_conn(scale_dir)
+    c = oracle_conn(scale_dir)
+    yield c
+    c.close()
 
 
 @pytest.fixture(scope="module")
@@ -393,8 +394,11 @@ def test_heavy_entry_at_sf1(spark, con_scale, results, op_id, scale_dir):
     t_big = timed(scale_dir)
     results[op_id] = {"sf0.1_sec": round(t_small, 3), "sf1_sec": round(t_big, 3)}
     # correctness still holds at 10x
-    if spec.oracle:
-        compare(spec.fn(spark, scale_dir), con_scale, spec.oracle, f"{op_id}@sf1")
+    check(
+        f"{op_id}@sf1",
+        spec.fn(spark, scale_dir).toPandas(),
+        con_scale.sql(spec.oracle).df(),
+    )
     # sub-quadratic growth: quadratic would be ~100x; allow 30x plus a
     # 3 s fixed-overhead floor (streaming checkpoints, shuffle setup)
     assert t_big <= 30.0 * t_small + 3.0, (op_id, t_small, t_big)

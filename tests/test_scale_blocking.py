@@ -517,17 +517,13 @@ def test_pq_adc_recall_vs_exact(spark, sf_dir):
     sampling slack). Guards against a codebook/encoding bug that
     would still hash-match its own oracle (both engines would compute
     the same WRONG ranking) but destroy retrieval quality."""
-    import duckdb
-
     from pe_firm_investment_database_pipeline_spark.plans.similarity import (
         sim_pq_topk,
     )
+    from tools.driver_sim import oracle_conn
 
     pq_top = [r["vec_id"] for r in sim_pq_topk(spark, sf_dir).collect()]
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'"
-    )
+    con = oracle_conn(sf_dir)
     exact = [
         r[0]
         for r in con.execute(

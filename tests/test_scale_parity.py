@@ -15,8 +15,7 @@ from __future__ import annotations
 import pytest
 
 from pe_firm_investment_database_pipeline_spark.plans import all_queries
-
-from .harness import compare, duckdb_conn
+from tools.driver_sim import check, oracle_conn
 
 SF01 = "/root/testdata/sf0.1"
 
@@ -35,10 +34,14 @@ SCALE_SENSITIVE = [
 
 @pytest.fixture(scope="module")
 def con01():
-    return duckdb_conn(SF01)
+    c = oracle_conn(SF01)
+    yield c
+    c.close()
 
 
 @pytest.mark.parametrize("op_id", SCALE_SENSITIVE)
 def test_scale_sensitive_parity_sf01(spark, con01, op_id):
     spec = all_queries()[op_id]
-    compare(spec.fn(spark, SF01), con01, spec.oracle, f"{op_id}@sf0.1")
+    check(
+        f"{op_id}@sf0.1", spec.fn(spark, SF01).toPandas(), con01.sql(spec.oracle).df()
+    )

@@ -255,7 +255,7 @@ def test_dataset_rewrite_rebuilds_fixture_fronts(spark, tmp_path):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from tests.harness import compare, duckdb_conn
+    from tools.driver_sim import check, oracle_conn
 
     from pe_firm_investment_database_pipeline_spark.plans import all_queries
 
@@ -267,15 +267,16 @@ def test_dataset_rewrite_rebuilds_fixture_fronts(spark, tmp_path):
     # snk_stream_parquet: a checkpointed sink over the restaged feed
     ops = ("join_dpp_prune", "stream_sliding", "snk_stream_parquet")
 
-    def check():
-        con = duckdb_conn(sf)
+    def check_all():
+        con = oracle_conn(sf)
         try:
             for op in ops:
-                compare(reg[op].fn(spark, sf), con, reg[op].oracle, op)
+                spec = reg[op]
+                check(op, spec.fn(spark, sf).toPandas(), con.sql(spec.oracle).df())
         finally:
             con.close()
 
-    check()
+    check_all()
     for table, key in (("orders", "o_orderkey"), ("events", "event_id")):
         path = os.path.join(sf, f"{table}.parquet")
         t = pq.read_table(path)
@@ -283,4 +284,4 @@ def test_dataset_rewrite_rebuilds_fixture_fronts(spark, tmp_path):
         assert 0 < kept.num_rows < t.num_rows
         pq.write_table(kept, path + ".tmp")
         os.replace(path + ".tmp", path)
-    check()
+    check_all()

@@ -16,9 +16,18 @@ is required even when run from the repo root: Pandas-UDF queries
 pickle references to the package and Spark's Python workers don't
 see the driver process's ``sys.path`` mutations.
 
+The master is ``local[N]`` with N from ``SPARK_GRAFT_CPUS`` or the
+host's core count (the ``session.get_spark`` rule).
+
 Environment probes:
     SPARK_GRAFT_SIM_SF_DIR=/root/testdata/sf0.001  # other scale factor
     SPARK_GRAFT_SIM_TZ=America/New_York            # non-UTC session zone
+    SPARK_GRAFT_SIM_SHUFFLE=7                      # 7 shuffle partitions
+    SPARK_GRAFT_SIM_AQE=0                          # adaptive execution off
+
+The same comparator serves pytest: ``oracle_conn`` is the one DuckDB
+oracle connection and ``check`` the one frame comparison, used by the
+parity and scale tests.
 """
 
 import json
@@ -26,14 +35,11 @@ import math
 import os
 import sys
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SIM_SF_DIR", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 def cell(v):
@@ -58,6 +64,48 @@ def canon(df):
     return cols, rows
 
 
+def oracle_conn(sf_dir):
+    """One DuckDB connection with a view per source table over
+    ``sf_dir``'s parquet files."""
+    import duckdb
+
+    from pe_firm_investment_database_pipeline_spark.sources.tables import TABLES
+
+    con = duckdb.connect()
+    # Pin the oracle's zone: if a fixture regeneration ships a
+    # tz-annotated timestamp column, DuckDB's ts::TIMESTAMP converts
+    # through its LOCAL TimeZone setting while Spark's unix_micros
+    # does not — on a non-UTC host the oracle would silently shift by
+    # the zone offset. (The engine side is tz-free by design.)
+    con.execute("SET TimeZone='UTC'")
+    for name in TABLES:
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
+        )
+    return con
+
+
+def check(op_id, got_pdf, want_pdf):
+    """Compare a Spark result with its oracle under the strict canon.
+    Raises AssertionError naming the op and the kind of mismatch
+    (schema, rows or values) with the differing columns or rows."""
+    sc, sr = canon(got_pdf)
+    oc, orr = canon(want_pdf)
+    if sc != oc:
+        raise AssertionError(
+            f"{op_id}: schema mismatch\n  spark cols: {sc}\n  oracle cols: {oc}"
+        )
+    if sr == orr:
+        return
+    why = "rows" if len(sr) != len(orr) else "values"
+    spark_only = list((Counter(sr) - Counter(orr)).elements())[:3]
+    oracle_only = list((Counter(orr) - Counter(sr)).elements())[:3]
+    raise AssertionError(
+        f"{op_id}: {why} mismatch spark={len(sr)} oracle={len(orr)}\n"
+        f"  spark-only: {spark_only}\n  oracle-only: {oracle_only}"
+    )
+
+
 def main():
     argv = sys.argv[1:]
     out = "/tmp/verify_drive/sim_results.json"
@@ -68,10 +116,10 @@ def main():
     only = set(argv)
 
     from pyspark.sql import SparkSession
-    import duckdb
     import __spark_entry__ as E
+    from pe_firm_investment_database_pipeline_spark.session import local_cpus
 
-    builder = SparkSession.builder.master("local[8]")
+    builder = SparkSession.builder.master(f"local[{local_cpus()}]")
     # Optional probe: a non-UTC session timezone must not change any
     # result (all outputs are designed tz-free — year/month ints,
     # epoch-us longs, DateType). SPARK_GRAFT_SIM_TZ=America/New_York
@@ -94,11 +142,7 @@ def main():
     if os.environ.get("SPARK_GRAFT_SIM_AQE") == "0":
         builder = builder.config("spark.sql.adaptive.enabled", "false")
     spark = builder.getOrCreate()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = oracle_conn(SF_DIR)
 
     if not only:
         n = E.entry(spark).count()
@@ -119,40 +163,23 @@ def main():
             fails.append(name)
             print(f"FAIL {name} spark-err {ex}", flush=True)
             continue
-        sql = os_.get(name)
-        if sql is None:
-            results[name] = {"rows": len(sdf), "oracle": None}
-            print(f"rows-only {name} rows={len(sdf)}", flush=True)
-            continue
         try:
-            odf = con.execute(sql).df()
+            odf = con.execute(os_[name]).df()
         except Exception as ex:
             results[name] = {"err": f"oracle:{ex}"[:300]}
             fails.append(name)
             print(f"FAIL {name} oracle-err {ex}", flush=True)
             continue
-        sc, sr = canon(sdf)
-        oc, orr = canon(odf)
-        ok = sc == oc and len(sr) == len(orr) and sr == orr
-        results[name] = {
-            "rows_match": len(sr) == len(orr),
-            "schema_match": sc == oc,
-            "hash_match": ok,
-            "spark_rows": len(sr),
-            "sec": round(time.time() - t0, 2),
-        }
-        if not ok:
+        sec = round(time.time() - t0, 2)
+        results[name] = {"hash_match": True, "spark_rows": len(sdf), "sec": sec}
+        try:
+            check(name, sdf, odf)
+        except AssertionError as ex:
+            results[name].update(hash_match=False, err=str(ex)[:2000])
             fails.append(name)
-            why = "schema" if sc != oc else ("rows" if len(sr) != len(orr) else "values")
-            print(f"FAIL {name} ({why}) spark={len(sr)} oracle={len(orr)}", flush=True)
-            if sc != oc:
-                print(f"  spark cols: {sc}\n  oracle cols: {oc}", flush=True)
-            else:
-                diff_s = [r for r in sr if r not in set(orr)][:3]
-                diff_o = [r for r in orr if r not in set(sr)][:3]
-                print(f"  spark-only: {diff_s}\n  oracle-only: {diff_o}", flush=True)
+            print(f"FAIL {ex}", flush=True)
         else:
-            print(f"ok {name} rows={len(sr)} {results[name]['sec']}s", flush=True)
+            print(f"ok {name} rows={len(sdf)} {sec}s", flush=True)
     os.makedirs(os.path.dirname(out) or ".", exist_ok=True)
     # subset runs MERGE into an existing artifact (the plan_audit /
     # scale-suite convention): re-verifying a few changed entries

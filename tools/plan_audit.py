@@ -23,14 +23,19 @@ forbidden or budgeted at cluster scale:
 
 Every entry's counts land in PLAN_AUDIT.json so the audit is
 diffable round over round; the process exits non-zero on any
-violation.
+violation. ``--dump DIR`` also writes each entry's formatted plan to
+``DIR/<op>.txt`` (plan evidence for an optimization: dump once from a
+checkout of the old commit and once from the new one, into two
+directories). Entries whose constructor executes eager staging run
+that staging here, so the captured plan is the plan the entry serves.
 
-Usage:
-    PYTHONPATH=/root/repo python tools/plan_audit.py [--out FILE] [op ...]
+Usage (from the repo root):
+    PYTHONPATH=. python tools/plan_audit.py [--out FILE] [--dump DIR] [op ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import io
 import json
 import os
@@ -175,13 +180,21 @@ def _count_single_partition_windows(df) -> int:
 
 
 def main() -> None:
-    argv = sys.argv[1:]
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLAN_AUDIT.json")
-    if "--out" in argv:
-        i = argv.index("--out")
-        out = argv[i + 1]
-        argv = argv[:i] + argv[i + 2 :]
-    only = set(argv)
+    ap = argparse.ArgumentParser()
+    ap.add_argument(
+        "--out",
+        default=os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "PLAN_AUDIT.json",
+        ),
+    )
+    ap.add_argument("--dump", metavar="DIR")
+    ap.add_argument("ops", nargs="*")
+    args = ap.parse_args()
+    out = args.out
+    only = set(args.ops)
+    if args.dump:
+        os.makedirs(args.dump, exist_ok=True)
 
     from pe_firm_investment_database_pipeline_spark.plans import all_queries
     from pe_firm_investment_database_pipeline_spark.session import get_spark
@@ -203,6 +216,9 @@ def main() -> None:
             violations.append(f"{name}: plan error")
             print(f"ERR  {name}: {ex}", flush=True)
             continue
+        if args.dump:
+            with open(os.path.join(args.dump, f"{name}.txt"), "w") as f:
+                f.write(f"== {name} at {SF_DIR} ==\n\n{plan}")
         nodes = _node_counts(df)
         row = {
             # node-walk counts (cache-stable — see _node_counts);
