@@ -1,5 +1,13 @@
-"""The reference seed pipeline (SURVEY.md §3.1) replayed over the
-captured JSONL response logs — the P1 golden-parity slice.
+"""The reference seed pipeline (SURVEY.md §3.1) replayed over a JSONL
+response log — the P1 golden-parity slice.
+
+The log the registry entries and their oracles read is the committed
+synthetic one under ``data/aic_logs/`` (``LOGS_GLOB``), written by its
+seeded ``generate.py`` in the capture's shape (FIXTURES.md §A1/A2):
+2 files, 10 lines, 2 of them corrupt; 160 member rows of 120 distinct
+members (one page re-delivered) → 32 PE rows in Australia → 24 firms.
+The reference capture's own logs are not part of the repo; the golden
+tests replay them where they exist.
 
 Reference semantics re-expressed (file:line vs /root/reference/):
 - ``src_jsonl_scan``   — line-per-record JSON log, tolerant of corrupt
@@ -12,14 +20,17 @@ Reference semantics re-expressed (file:line vs /root/reference/):
   AND address contains Australia (seed_aic.py:334-336).
 - ``agg_dedup_first``  — seen-set dedup by FullName
   (seed_aic.py:311,336-338). The captured duplicates are full-record
-  identical (verified across all 4 logs: 76 filtered rows → 28
-  distinct records → 28 distinct FullNames), so first-seen ≡ distinct
-  ≡ any-seen here; we use ``dropDuplicates(["FullName"])`` with a
-  full-record distinct first so the survivor is deterministic.
+  identical (verified across all 4 reference logs: 76 filtered rows →
+  28 distinct records → 28 distinct FullNames; the synthetic log's
+  re-delivered page keeps that property by construction), so
+  first-seen ≡ distinct ≡ any-seen here; we use
+  ``dropDuplicates(["FullName"])`` with a full-record distinct first
+  so the survivor is deterministic.
 - ``proj_select`` / ``snk_csv`` — 2-col and 7-col projections
   (seed_aic.py:356-366); the CSV write itself is exercised in
-  tests/test_seed_pipeline.py against the golden
-  output/PE_firms.csv (28 firms).
+  tests/test_seed_pipeline.py, against a pure-Python replay of the
+  contract on the synthetic log and, where the reference capture
+  exists, against its golden output/PE_firms.csv (28 firms).
 
 Scale note: the log glob reads as a distributed json scan; the probe +
 filters are all pushable column predicates after the typed read, and
@@ -30,13 +41,17 @@ projected member columns, never headers/raw payloads.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import QuerySpec
 
-LOGS_GLOB = "/root/reference/logs/*.jsonl"
+# The committed synthetic response log (data/aic_logs/generate.py);
+# the entries and both oracles read it on every host.
+LOGS_GLOB = str(Path(__file__).resolve().parent.parent / "data" / "aic_logs" / "*.jsonl")
 
 # Explicit member schema — only the fields the pipeline consumes
 # (schema-on-read discipline; extra JSON keys are simply not scanned).
@@ -118,8 +133,8 @@ def extract_pe_firms(spark: SparkSession, path: str = LOGS_GLOB) -> DataFrame:
 
 
 def seed_extract_pe_firms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """queries() wrapper — the log path is fixed (reference capture),
-    independent of sf_dir."""
+    """queries() wrapper — reads the committed synthetic log
+    (``LOGS_GLOB``: 24 firms), independent of sf_dir."""
     return extract_pe_firms(spark)
 
 
