@@ -89,8 +89,8 @@ def join_score_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast join. No shuffle of the customer side, no pair
     # materialization: E x O(log C) work instead of E x C.
     # spread=False: the staircase build's inputs are dimension-sized
-    # (suppliers x 175 grid cells); the parallelism-floor repartition
-    # would turn every narrow stage into 32 near-empty tasks and the
+    # (suppliers x 175 grid cells); the pre-split copy would turn
+    # every narrow stage into one near-empty task per core and the
     # build cost becomes pure task-scheduling latency
     sup = load_table(spark, sf_dir, "supplier", spread=False).select(
         "s_suppkey",

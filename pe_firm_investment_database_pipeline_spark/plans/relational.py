@@ -2134,13 +2134,11 @@ def join_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", cents("l_extendedprice").alias("price_c")
         )
-        # creation side reads the scan DIRECTLY: InjectRuntimeFilter
-        # requires a plain scan+filter+project creation side — the
-        # parallelism-floor Repartition load_table adds (for scan-
-        # heavy sides) defeats the pattern, and a filtered dimension
-        # needs no parallelism floor
+        # InjectRuntimeFilter requires a plain scan+filter+project
+        # creation side; a filtered dimension needs no pre-split copy,
+        # so it reads the original file
         o = (
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
+            load_table(spark, sf_dir, "orders", spread=False)
             .where(F.col("o_orderpriority") == "1-URGENT")
             .select("o_orderkey", "o_orderpriority")
         )

@@ -466,10 +466,8 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: digest map-side, groupBy digest, keep min doc_id
     (deterministic survivor). At 100 TB the shuffle carries only
     (digest, doc_id) — never the text. ``spread=False``: the only map
-    work is the md5 projection, so the digest belongs IN the scan
-    task — the parallelism-floor exchange would shuffle the full text
-    column for nothing (measured 0.61 s -> 0.34 s at sf0.1, the r6
-    bench regression on this entry)."""
+    work is the md5 projection, so it runs in the one scan task of the
+    original file."""
     d = load_table(spark, sf_dir, "documents", spread=False)
     return (
         d.select("doc_id", F.md5("text").alias("h"))

@@ -1,9 +1,12 @@
 """Typed parquet scans over the driver's star schema (repo:TESTDATA.md).
 
 SURVEY.md §2.1 ``src_parquet_scan``. Schemas are declared in
-repo:FIXTURES.md §B; we rely on parquet's self-describing footer (no
-inference pass) and let Catalyst push filters/projections into the
-scan. On a cluster these would be partitioned/bucketed tables; the
+repo:FIXTURES.md §B. Spark infers each table's schema from its parquet
+footer, which costs one Spark job; ``_scan`` runs that inference once
+per (application, dataset, table) and every later ``load_table`` call
+passes the kept schema to ``spark.read.schema(...)``, so a warm read
+launches no job. Catalyst still pushes filters and projections into
+the scan. On a cluster these would be partitioned/bucketed tables; the
 query plans only depend on logical schema, so swapping in a
 ``spark.read.table`` of a bucketed catalog table is a one-line change.
 """
@@ -11,8 +14,12 @@ query plans only depend on logical schema, so swapping in a
 from __future__ import annotations
 
 import os
+import shutil
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..functions.session_cache import dataset_fingerprint, front, staging_path
 
 TABLES = (
     "region",
@@ -29,90 +36,138 @@ TABLES = (
 
 # Dimension tables small enough to broadcast at any realistic scale
 # (region=5, nation=25 rows are fixed-cardinality in TPC-H-like schemas).
+# They are never pre-split: one scan task is all a 25-row table needs.
 BROADCAST_DIMS = ("region", "nation")
 
-
-# Fixed-cardinality dims stay unspread: they broadcast anyway, and an
-# exchange under a BroadcastExchange is pure overhead.
-_NO_SPREAD = {"region", "nation"}
+# Spark's default split size (spark.sql.files.maxPartitionBytes).
+_SPLIT_BYTES = 128 * 1024 * 1024
 
 
-def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    """Parallelism floor for under-split inputs. The driver's testdata
-    is one single-row-group parquet file per table, which Spark can
-    only scan as ONE task — every downstream map-side stage (regexp,
-    shingling, scoring) would run on one core of 32. A round-robin
-    repartition keeps the scan cheap and moves compute downstream onto
-    all cores (measured 9.5s → <1s for the shingle explode at sf0.1).
-    On a real cluster with 128 MB-sized files ``est_parts`` already
-    exceeds the core count and this is a no-op."""
+def _spread(df: DataFrame, sf_dir: str, name: str, path: str, n: int) -> str | None:
+    """Parallelism floor for under-split inputs: the path of a copy of
+    ``df`` written as ``n`` part files, or None when the table already
+    has at least ``n`` splits. The test data is one
+    single-row-group parquet file per table, which Spark can only scan
+    as ONE task, so every downstream map-side stage (regexp, shingling,
+    scoring) would run on one core of ``n``. The copy is
+    ``df.repartition(n)`` written once: the same deterministic
+    round-robin split a per-query repartition makes, so plans see the
+    same partition contents, but its scan is already ``n`` tasks
+    (Spark packs at most ``defaultParallelism`` near-equal small files
+    one per split) and no query pays a round-robin exchange. On a real
+    cluster with 128 MB-sized files the table has enough splits and
+    nothing is staged.
+
+    The copy lives at a path named by the dataset fingerprint, so a
+    rewritten dataset gets a new copy and a published copy is never
+    rewritten: a session never deletes a tree another session reads,
+    and every session on the host shares one copy per (dataset, n,
+    table). It is written into ``<path>.tmp<pid>`` and renamed into
+    place; a process that loses the rename race drops its tree and
+    reads the winner's."""
     try:
         size = os.path.getsize(path)
     except OSError:
-        return df
-    max_bytes = 128 * 1024 * 1024
-    est_parts = max(1, size // max_bytes)
-    target = spark.sparkContext.defaultParallelism
-    if est_parts < target:
-        return df.repartition(target)
-    return df
-
-
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool = True
-) -> DataFrame:
-    """``spread=False`` opts out of the parallelism floor for plans
-    whose only map work is a cheap narrow projection (e.g. a digest):
-    there the round-robin exchange would shuffle the FULL payload
-    column just to parallelize work the single scan task finishes
-    faster than the shuffle costs. At real scale ``_spread`` is a
-    no-op either way, so the flag only affects under-split inputs."""
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        return _load_events(spark, sf_dir)
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if not spread or name in _NO_SPREAD:
-        return df
-    return _spread(spark, df, path)
-
-
-def _read_events_raw(spark: SparkSession, path: str) -> DataFrame:
-    """Read events.parquet, handling a TIMESTAMP(NANOS) footer (Spark 4
-    has no native nanos type; the legacy conf scans it as int64). The
-    footer type is inspected DIRECTLY (pyarrow) instead of inferring
-    from an exception class, and the legacy conf is SCOPED to this
-    read — save/set/restore — so it never leaks into how other nanos
-    parquet columns in the session are scanned. (The conf is consulted
-    at schema-resolution time only; later actions on the returned
-    frame execute correctly after the restore.)"""
-    from pyspark.sql.utils import AnalysisException
-
-    nanos = False
-    try:
-        import pyarrow.parquet as papq
-
-        nanos = str(papq.read_schema(path).field("ts").type) == "timestamp[ns]"
-    except Exception:  # missing field / unreadable footer: let Spark decide
-        nanos = False
-    if not nanos:
+        return None
+    if max(1, size // _SPLIT_BYTES) >= n:
+        return None
+    mtime_ns, nbytes = dataset_fingerprint(sf_dir)
+    dst = staging_path(None, os.path.abspath(sf_dir), f"split{n}_{name}_{mtime_ns}_{nbytes}")
+    if not os.path.isdir(dst):
+        tmp = f"{dst}.tmp{os.getpid()}"
+        df.repartition(n).write.mode("overwrite").parquet(tmp)
         try:
-            return spark.read.parquet(path)
-        except AnalysisException:
-            # footer shape pyarrow didn't flag but Spark rejects —
-            # last resort: try the legacy nanos path below
-            pass
+            os.rename(tmp, dst)
+        except OSError:
+            if not os.path.isdir(dst):
+                raise
+            shutil.rmtree(tmp, ignore_errors=True)
+    return dst
+
+
+@contextmanager
+def _nanos_as_long(spark: SparkSession, on: bool):
+    """Scope ``spark.sql.legacy.parquet.nanosAsLong`` to one read of a
+    TIMESTAMP(NANOS) footer (Spark 4 has no native nanos type; the
+    legacy conf scans it as int64): save/set/restore, so it never
+    leaks into how other nanos parquet columns in the session are
+    scanned. The conf is consulted when the read resolves its schema;
+    later actions on the returned frame run correctly after the
+    restore."""
+    if not on:
+        yield
+        return
     conf = "spark.sql.legacy.parquet.nanosAsLong"
     prev = spark.conf.get(conf, None)
     spark.conf.set(conf, "true")
     try:
-        return spark.read.parquet(path)
+        yield
     finally:
         if prev is None:
             spark.conf.unset(conf)
         else:
             spark.conf.set(conf, prev)
+
+
+def _ts_is_nanos(path: str) -> bool:
+    """Whether events.parquet's ``ts`` footer type is TIMESTAMP(NANOS),
+    read DIRECTLY from the footer (pyarrow, no Spark job)."""
+    try:
+        import pyarrow as pa
+        import pyarrow.parquet as papq
+
+        t = papq.read_schema(path).field("ts").type
+    except Exception:  # missing field / unreadable footer: let Spark decide
+        return False
+    return pa.types.is_timestamp(t) and t.unit == "ns"
+
+
+def _scan(spark: SparkSession, sf_dir: str, name: str) -> tuple:
+    """(schema, pre-split copy or None, nanos) of table ``name``: the
+    front ``table_scan``, built once per (application, dataset, table,
+    defaultParallelism). The build is the one inference job of the
+    table's footer plus, for an under-split table, the staged copy of
+    ``_spread``. Events are staged from the raw read: a nanos ``ts``
+    lands in the copy as plain int64, which ``_load_events`` already
+    branches on."""
+    n = spark.sparkContext.defaultParallelism
+    path = f"{sf_dir}/{name}.parquet"
+
+    def build():
+        nanos = name == "events" and _ts_is_nanos(path)
+        with _nanos_as_long(spark, nanos):
+            raw = spark.read.parquet(path)
+            split = None if name in BROADCAST_DIMS else _spread(raw, sf_dir, name, path, n)
+        return raw.schema, split, nanos
+
+    return front(spark, sf_dir, "table_scan", build, name, n)
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str, spread: bool) -> DataFrame:
+    schema, split, nanos = _scan(spark, sf_dir, name)
+    if spread and split is not None:
+        return spark.read.schema(schema).parquet(split)
+    with _nanos_as_long(spark, nanos):
+        return spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+
+
+def load_table(
+    spark: SparkSession, sf_dir: str, name: str, spread: bool = True
+) -> DataFrame:
+    """Table ``name`` of ``sf_dir``, read with its kept schema (no
+    Spark job once the table's ``_scan`` front is warm). An
+    under-split table is read from its pre-split copy (``_spread``),
+    so its scan already runs on every core.
+
+    ``spread=False`` reads the original file instead, for plans whose
+    only map work is a cheap narrow projection (e.g. a digest) or
+    whose inputs are dimension-sized. At real scale the table needs no
+    copy, so the flag only affects under-split inputs."""
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    if name == "events":
+        return _load_events(spark, sf_dir)
+    return _read(spark, sf_dir, name, spread)
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -133,11 +188,8 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    path = f"{sf_dir}/events.parquet"
-    raw = _read_events_raw(spark, path)
-    ts_type = raw.schema["ts"].dataType
-
-    df = _spread(spark, raw, path)
+    df = _read(spark, sf_dir, "events", spread=True)
+    ts_type = df.schema["ts"].dataType
     if isinstance(ts_type, T.LongType):
         # nanosAsLong path: ts is already int64 epoch nanos. Integer
         # division end-to-end — int64 nanos exceed double precision, so

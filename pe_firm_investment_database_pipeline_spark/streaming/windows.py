@@ -63,7 +63,7 @@ def _prepare_input(spark: SparkSession, sf_dir: str) -> str:
     batches, exercising the multi-batch merge path, instead of
     inheriting the events scan's 32-task spread (which made them run
     16 micro-batches — 16 state read+rewrite cycles per invocation —
-    purely as an artifact of load_table's parallelism floor; the
+    purely as an artifact of load_table's pre-split copy; the
     fixpoint itself is batch-boundary-independent by design)."""
 
     def write(path: str) -> None:

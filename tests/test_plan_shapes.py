@@ -110,13 +110,14 @@ def test_lsh_join_is_equi_not_cross(spark):
 def test_chunk_windows_is_narrow_only(spark):
     """chunk_token_windows claims scan-speed at 100 TB: no shuffle may
     come from the operator itself — token count, in-row sequence,
-    explode, all narrow. The only allowed exchange is `_spread`'s
-    round-robin parallelism floor for the under-split test files
-    (REPARTITION_BY_NUM; a no-op on real 128 MB-split inputs) — never
-    a hash/range exchange demanded by the operator."""
+    explode, all narrow. The under-split test files are read from
+    `_spread`'s pre-split copy, so the scan itself has one task per
+    core and no exchange; any REPARTITION_BY_NUM exchange the plan
+    does show is an explicit repartition — never a hash/range
+    exchange demanded by the operator."""
     plan = _plan(spark, "chunk_token_windows")
     # formatted plans print each node twice (tree + detail); every
-    # Exchange present must be the round-robin spread, nothing else
+    # Exchange present must be an explicit round-robin repartition
     assert plan.count("Exchange") == 2 * plan.count("REPARTITION_BY_NUM")
     assert "ENSURE_REQUIREMENTS" not in plan  # no operator-required shuffle
     assert "Generate" in plan  # the explode actually happens
@@ -218,10 +219,10 @@ def test_scd2_single_exchange(spark):
     """The SCD2 dimension-build plan: two windows and the change
     filter all key on user_id, so Catalyst must plan exactly ONE
     operator-required exchange (both sorts/windows reuse the same
-    partitioning); the only other exchange allowed is _spread's
-    round-robin floor. Asserted on the front BUILDER (_scd2_changes)
-    because merge_scd2's returned frame is the staged eager
-    localCheckpoint — a lineage-free scan (pinned below)."""
+    partitioning); the scan adds none (under-split inputs are read
+    from _spread's pre-split copy). Asserted on the front BUILDER
+    (_scd2_changes) because merge_scd2's returned frame is the staged
+    eager localCheckpoint — a lineage-free scan (pinned below)."""
     import io
     from contextlib import redirect_stdout
 
@@ -265,7 +266,9 @@ def test_domain_mixture_rate_table_is_broadcast(spark):
 
 def test_pii_redact_is_map_side(spark):
     """txt_pii_redact runs at scan speed: regex project only — no
-    exchange beyond _spread's parallelism floor, no join, no agg."""
+    exchange (the scan reads _spread's pre-split copy, so any
+    round-robin exchange would be an explicit repartition), no join,
+    no agg."""
     plan = _plan(spark, "txt_pii_redact")
     assert plan.count("Exchange") == 2 * plan.count("REPARTITION_BY_NUM")
     assert "ENSURE_REQUIREMENTS" not in plan
@@ -322,9 +325,10 @@ def test_runtime_bloom_filter_reaches_fact_scan(spark):
     """At 100 TB a selective dimension predicate must prune fact rows
     BEFORE the join shuffle via Spark's runtime bloom filter. The
     engine's session keeps the optimizer flag on, and the injection
-    works on the at-scale scan path — which has NO parallelism-floor
-    repartition (_spread is a no-op once file count exceeds core
-    count), so the test scans raw parquet exactly as a cluster would.
+    works on the at-scale scan path — the original files, not
+    _spread's pre-split copy (no copy is staged once the split count
+    reaches the core count), so the test scans raw parquet exactly as
+    a cluster would.
     Thresholds are lowered because sf0.01 inputs are far below the
     production 10 GB application-side default."""
     from pyspark.sql import functions as F
@@ -476,11 +480,12 @@ def test_bloom_prefilter_joins_are_broadcast(spark):
 
 def test_recursive_split_is_narrow(spark):
     """chunk_recursive_split must be a pure narrow transform: no
-    Exchange anywhere except the parallelism-floor repartition of the
-    source scan — the chunker itself adds zero shuffles."""
+    Exchange anywhere (the source scan reads _spread's pre-split copy,
+    which needs no repartition) — the chunker itself adds zero
+    shuffles."""
     plan = _plan(spark, "chunk_recursive_split")
-    # only _spread's round-robin parallelism floor — never a hash or
-    # range repartition (those would mean a hidden wide dependency)
+    # never a hash or range repartition (those would mean a hidden
+    # wide dependency)
     assert "hashpartitioning" not in plan
     assert "rangepartitioning" not in plan
     assert "Generate" in plan  # the posexplode
@@ -489,8 +494,7 @@ def test_recursive_split_is_narrow(spark):
 
 def test_ohlc_single_shuffle(spark):
     """ts_resample_ohlc's window partitioning (type, day) must be
-    reused by the aggregate: exactly ONE hash exchange beyond the
-    source parallelism floor."""
+    reused by the aggregate: exactly ONE hash exchange."""
     plan = _plan(spark, "ts_resample_ohlc")
     assert plan.count("Arguments: hashpartitioning") == 1
 
