@@ -143,8 +143,9 @@ def join_score_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build CONCURRENTLY on the driver's broadcast thread pool — the
     # four ~0.6 s supplier-side builds overlap, which A/B'd faster
     # than serializing them behind one eager checkpoint (1.6-1.8 vs
-    # 1.8-2.6 s warm at sf0.1; the build stays dimension-sized at
-    # any SF).
+    # 1.8-2.6 s warm at sf0.1). The build is supplier-sized, not
+    # bounded per group: each group's collect_list buffer holds up to
+    # one supplier count of (suppkey, bal) structs before the fold.
     stairs = (
         member.groupBy("nat_rel", "natkey", "mod_rel", "modkey")
         .agg(
