@@ -41,10 +41,24 @@ frame; it never deletes files. Fronts go in four ways:
 - all at once: ``evict_staged()``, the memory guard between the
   families of a long sweep.
 
-**Staging paths** of on-disk fronts come from ``staging_path`` only:
-``<tmp>/pe_<prefix>_<md5(sf_dir)[:10]>_<app>``. The sf_dir hash keeps
-distinct data dirs apart, the application id keeps two concurrent
-drivers from overwriting each other's files mid-read.
+**Staging paths** of on-disk fronts come from two helpers, one per
+class of staged data:
+
+- ``shared_copy``: data derived only from the dataset (pre-split
+  tables, the DPP layout, stream feeds, sink inputs), published once
+  per host at ``<tmp>/pe_data_<md5>_<mtime_ns>_<bytes>/<name>`` and
+  never rewritten; a rewritten dataset gets a new directory, whose
+  ``source`` file names the dataset dir;
+- ``app_dir``: data mutated or rewritten on every call (sinks, stream
+  state, vacuum trees, catalog-table data), under one root per
+  application, ``<tmp>/pe_app_<applicationId>/<prefix>_<md5>``.
+
+**Liveness comes from a lock, not from a clock.** The process that
+creates an application root holds ``flock`` on ``<root>/lock`` for
+life. Then, and again at exit, it removes every other ``pe_app_*`` root
+whose lock it can take (its process is dead) and every ``pe_data_*``
+dir whose source is gone or rewritten. Older ``pe_<prefix>_...``
+entries are left alone.
 
 **The lock rule.** ``memoize`` guards the miss path with the
 process-wide ``_MEMO_LOCK`` and a double-checked insert, so two
@@ -56,8 +70,12 @@ takes no lock, but that thread's miss would block forever.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import fcntl
 import hashlib
 import os
+import shutil
 import tempfile
 import threading
 from typing import Callable, TypeVar
@@ -66,6 +84,8 @@ from typing import Callable, TypeVar
 _FRONTS: dict[tuple, object] = {}
 # staged_key(...) -> the registry entry whose declared result it is.
 _OWNERS: dict[tuple, str] = {}
+# application root -> the fd of the lock this process holds on it.
+_APP_LOCKS: dict[str, int] = {}
 
 # One process-wide lock for all miss paths: front builds are rare and
 # heavyweight (a localCheckpoint executes the build job under the
@@ -116,20 +136,105 @@ def staged_key(spark, sf_dir: str, *extra) -> tuple:
     return (spark.sparkContext.applicationId, sf_dir, dataset_fingerprint(sf_dir), *extra)
 
 
-def staging_path(spark, sf_dir: str, prefix: str) -> str:
-    """``<tmp>/pe_<prefix>_<md5(sf_dir)[:10]>_<app>``: the directory
-    of an on-disk front or of an entry's per-call output. With
-    ``spark=None`` the path has no application part and is shared by
-    every session on the host (the caller must then make reuse safe
-    across processes)."""
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"pe_{prefix}_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}",
-    )
-    if spark is None:
-        return path
+def _digest(path: str) -> str:
+    return hashlib.md5(path.encode()).hexdigest()[:10]
+
+
+def _publish(tmp: str, dst: str) -> None:
+    """Rename the finished tree ``tmp`` to ``dst``. When another process
+    published ``dst`` first, drop ``tmp`` and keep the winner's."""
+    try:
+        os.rename(tmp, dst)
+    except OSError:
+        if not os.path.isdir(dst):
+            raise
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _data_dir(src: str) -> str:
+    mtime_ns, nbytes = dataset_fingerprint(src)
+    return os.path.join(tempfile.gettempdir(), f"pe_data_{_digest(src)}_{mtime_ns}_{nbytes}")
+
+
+def shared_copy(sf_dir: str, name: str, write: Callable[[str], object]) -> str:
+    """The host-shared copy ``name`` of data derived only from the
+    dataset ``sf_dir``: ``write(path)`` runs only when no process has
+    published the copy yet. A published copy is never rewritten."""
+    src = os.path.abspath(sf_dir)
+    root = _data_dir(src)
+    path = os.path.join(root, name)
+    if not os.path.isdir(root):
+        tmp = f"{root}.tmp{os.getpid()}"
+        os.makedirs(tmp, exist_ok=True)
+        with open(os.path.join(tmp, "source"), "w") as f:
+            f.write(src)
+        _publish(tmp, root)
+    if not os.path.isdir(path):
+        tmp = f"{path}.tmp{os.getpid()}"
+        shutil.rmtree(tmp, ignore_errors=True)  # this pid's own crashed write
+        write(tmp)
+        _publish(tmp, path)
+    return path
+
+
+def app_dir(spark, sf_dir: str, prefix: str) -> str:
+    """``<tmp>/pe_app_<applicationId>/<prefix>_<md5(abspath)[:10]>``:
+    the directory of mutable or per-call data of this application.
+    The directory itself is not created."""
+    return os.path.join(_app_root(spark), f"{prefix}_{_digest(os.path.abspath(sf_dir))}")
+
+
+def _app_root(spark) -> str:
+    """This application's root, created with its lock held on first use;
+    creating it sweeps ``<tmp>``."""
     app = spark.sparkContext.applicationId.replace(":", "_").replace("/", "_")
-    return f"{path}_{app}"
+    root = os.path.join(tempfile.gettempdir(), f"pe_app_{app}")
+    if root not in _APP_LOCKS:
+        with _MEMO_LOCK:
+            if root not in _APP_LOCKS:
+                _APP_LOCKS[root] = _claim(root)
+                _sweep(os.path.dirname(root))
+    return root
+
+
+@atexit.register
+def _sweep_at_exit() -> None:
+    """Sweep again at exit: a dataset the process rewrote leaves copies
+    of its old fingerprint. Registered at import, so it runs after exit
+    hooks registered later (such as a test runner's temp-dir cleanup)."""
+    if _APP_LOCKS:
+        _sweep(tempfile.gettempdir())
+
+
+def _claim(root: str) -> int:
+    """Create ``root`` with ``<root>/lock`` locked by this process and
+    return the lock's fd. The lock is taken under a ``.tmp<pid>`` name
+    before the rename, so a sweeper never sees an unlocked root."""
+    tmp = f"{root}.tmp{os.getpid()}"
+    os.makedirs(tmp, exist_ok=True)
+    fd = os.open(os.path.join(tmp, "lock"), os.O_RDWR | os.O_CREAT)
+    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    os.rename(tmp, root)
+    return fd
+
+
+def _sweep(tmp: str) -> None:
+    """Remove the roots of dead applications and the shared copies of
+    datasets that are gone or rewritten. Unfinished ``.tmp<pid>`` trees
+    and other names are left alone."""
+    for name in os.listdir(tmp):
+        path = os.path.join(tmp, name)
+        if ".tmp" in name:
+            continue
+        with contextlib.suppress(OSError):  # a live process's lock, or swept already
+            if name.startswith("pe_app_"):
+                with open(os.path.join(path, "lock")) as f:
+                    fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    shutil.rmtree(path, ignore_errors=True)
+            elif name.startswith("pe_data_"):
+                with open(os.path.join(path, "source")) as f:
+                    if _data_dir(f.read()) != path:
+                        shutil.rmtree(path, ignore_errors=True)
 
 
 def memoize(cache: dict, key: tuple, build: Callable[[], T]) -> T:

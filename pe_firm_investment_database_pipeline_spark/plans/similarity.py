@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.session_cache import front, staging_path
+from ..functions.session_cache import app_dir, front
 from ..registry import QuerySpec
 from ..sources.tables import load_table
 
@@ -1374,14 +1374,15 @@ def _ivf_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     import os
 
     def build() -> tuple[str, str]:
-        cents_name = os.path.basename(staging_path(None, sf_dir, "ivf_cents"))
-        post_name = os.path.basename(staging_path(None, sf_dir, "ivf_postings"))
+        cents_path = app_dir(spark, sf_dir, "ivf_cents")
+        post_path = app_dir(spark, sf_dir, "ivf_post")
+        cents_name, post_name = os.path.basename(cents_path), os.path.basename(post_path)
         emb, cents, ranked = _ivf_index(_emb_q(spark, sf_dir), stage_key=(sf_dir, "ivf"))
         spark.sql(f"DROP TABLE IF EXISTS {cents_name}")
         spark.sql(f"DROP TABLE IF EXISTS {post_name}")
         (
             cents.write.format("parquet")
-            .option("path", staging_path(spark, sf_dir, "ivf_cents"))
+            .option("path", cents_path)
             .mode("overwrite")
             .saveAsTable(cents_name)
         )
@@ -1397,7 +1398,7 @@ def _ivf_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .write.format("parquet")
             .bucketBy(_ANN_INDEX_BUCKETS, "cell")
             .sortBy("cell")
-            .option("path", staging_path(spark, sf_dir, "ivf_post"))
+            .option("path", post_path)
             .mode("overwrite")
             .saveAsTable(post_name)
         )

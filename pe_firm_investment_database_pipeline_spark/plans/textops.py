@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.session_cache import front, staging_path
+from ..functions.session_cache import app_dir, front
 from ..registry import QuerySpec
 from ..sources.tables import load_table
 
@@ -947,7 +947,8 @@ def _lsh_index_table(spark: SparkSession, sf_dir: str) -> str:
     import os
 
     def build() -> str:
-        name = os.path.basename(staging_path(None, sf_dir, "lsh_band_index"))
+        path = app_dir(spark, sf_dir, "lsh_index")
+        name = os.path.basename(path)
         corpus = _minhash_sigs(spark, sf_dir).where(F.col("doc_id") % 10 != 0)
         bands = _minhash_bands(corpus).select(
             "doc_id",
@@ -959,7 +960,7 @@ def _lsh_index_table(spark: SparkSession, sf_dir: str) -> str:
             bands.write.format("parquet")
             .bucketBy(_LSH_INDEX_BUCKETS, "ikey")
             .sortBy("ikey")
-            .option("path", staging_path(spark, sf_dir, "lsh_index"))
+            .option("path", path)
             .mode("overwrite")
             .saveAsTable(name)
         )

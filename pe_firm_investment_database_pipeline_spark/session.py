@@ -29,18 +29,14 @@ def local_cpus() -> int:
 
 def get_spark(
     app_name: str = "pe-pipeline-spark",
-    shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
 ) -> SparkSession:
     cpus = local_cpus()
-    shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
-    )
     mem = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -74,22 +70,10 @@ def get_spark(
         # plan graphs and metrics even with the UI disabled (they
         # feed the status APIs) — cap them so a many-query session's
         # listener heap stays bounded. NOTE: the caps truncate
-        # status-API history for EVERY get_spark() consumer; nothing
-        # in-repo reads those APIs today, and a consumer that needs
-        # deeper history can raise the caps via the env overrides
-        # (ADVICE r12).
-        .config(
-            "spark.sql.ui.retainedExecutions",
-            os.environ.get("SPARK_GRAFT_RETAINED_EXECUTIONS", "50"),
-        )
-        .config(
-            "spark.ui.retainedJobs",
-            os.environ.get("SPARK_GRAFT_RETAINED_JOBS", "100"),
-        )
-        .config(
-            "spark.ui.retainedStages",
-            os.environ.get("SPARK_GRAFT_RETAINED_STAGES", "200"),
-        )
+        # status-API history for EVERY get_spark() consumer.
+        .config("spark.sql.ui.retainedExecutions", "50")
+        .config("spark.ui.retainedJobs", "100")
+        .config("spark.ui.retainedStages", "200")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # managed tables (bucketed-join tests) land in tmp, not the repo
         .config(
@@ -104,7 +88,7 @@ def get_spark(
         # non-atomic cloud stores, not POSIX-rename local/HDFS dirs.
         # On a real cluster the equivalent posture is the
         # object-store committers (magic/S3A). _SUCCESS markers stay
-        # ON (the staged-front reuse gate at io_ops.py reads them).
+        # ON (Spark's default; no package code reads them).
         # NOTE: overriding fs.file.impl with RawLocalFileSystem (to
         # drop ChecksumFileSystem's per-file .crc shadows — measured
         # 2.7x on the fragment-stage write) was tried and REVERTED:

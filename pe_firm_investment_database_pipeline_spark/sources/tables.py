@@ -14,12 +14,11 @@ query plans only depend on logical schema, so swapping in a
 from __future__ import annotations
 
 import os
-import shutil
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.session_cache import dataset_fingerprint, front, staging_path
+from ..functions.session_cache import front, shared_copy
 
 TABLES = (
     "region",
@@ -58,31 +57,18 @@ def _spread(df: DataFrame, sf_dir: str, name: str, path: str, n: int) -> str | N
     cluster with 128 MB-sized files the table has enough splits and
     nothing is staged.
 
-    The copy lives at a path named by the dataset fingerprint, so a
-    rewritten dataset gets a new copy and a published copy is never
-    rewritten: a session never deletes a tree another session reads,
-    and every session on the host shares one copy per (dataset, n,
-    table). It is written into ``<path>.tmp<pid>`` and renamed into
-    place; a process that loses the rename race drops its tree and
-    reads the winner's."""
+    The copy is a ``shared_copy`` of the dataset: staged once per host
+    and (dataset, n, table), never rewritten, and a rewritten dataset
+    gets a new copy."""
     try:
         size = os.path.getsize(path)
-    except OSError:
+    except OSError:  # not a local file (e.g. a cluster store): never staged
         return None
     if max(1, size // _SPLIT_BYTES) >= n:
         return None
-    mtime_ns, nbytes = dataset_fingerprint(sf_dir)
-    dst = staging_path(None, os.path.abspath(sf_dir), f"split{n}_{name}_{mtime_ns}_{nbytes}")
-    if not os.path.isdir(dst):
-        tmp = f"{dst}.tmp{os.getpid()}"
-        df.repartition(n).write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, dst)
-        except OSError:
-            if not os.path.isdir(dst):
-                raise
-            shutil.rmtree(tmp, ignore_errors=True)
-    return dst
+    return shared_copy(
+        sf_dir, f"split{n}_{name}", lambda p: df.repartition(n).write.parquet(p)
+    )
 
 
 @contextmanager

@@ -36,7 +36,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.session_cache import front, staging_path
+from ..functions.session_cache import app_dir, front, shared_copy
 from ..registry import QuerySpec
 from ..sources.tables import load_table
 
@@ -54,7 +54,7 @@ _EVENT_SCHEMA = (
 def _prepare_input(spark: SparkSession, sf_dir: str) -> str:
     """Normalize events (ns→µs timestamps, exact value cents) into a
     parquet dir the file stream source can read — the "stream_input"
-    feed, staged once per (session, dataset); the streaming operators
+    feed, staged once per (host, dataset); the streaming operators
     share it.
 
     Staged as 4 files — the `_prepare_docs_input` discipline — so the
@@ -90,7 +90,7 @@ def _prepare_input(spark: SparkSession, sf_dir: str) -> str:
 # re-processes the staged feed end to end (the feed STAGING itself —
 # _prepare_input / _prepare_docs_input — stays a front: it is input
 # fixturing, the analogue of the parquet dataset, not query work).
-# Values are staging_path prefixes.
+# Values are app_dir prefixes.
 _STREAM_STATE_DIRS = {
     "stream_dedup_lsh": ("stream_lshdedup", "stream_lshdedup_ck"),
     "stream_upsert_foreachbatch": ("upsert", "upsert_ck"),
@@ -109,7 +109,7 @@ def _drop_dirs(spark: SparkSession, sf_dir: str, prefixes) -> None:
     import shutil
 
     for p in prefixes:
-        shutil.rmtree(staging_path(spark, sf_dir, p), ignore_errors=True)
+        shutil.rmtree(app_dir(spark, sf_dir, p), ignore_errors=True)
 
 
 def evict_stream_state(spark: SparkSession, sf_dir: str, entry: str) -> None:
@@ -122,17 +122,15 @@ def evict_stream_state(spark: SparkSession, sf_dir: str, entry: str) -> None:
 
 
 def _staged_feed(spark: SparkSession, sf_dir: str, prefix: str, write) -> str:
-    """The "stream_feed" front ``prefix``: ``write(path)`` runs once
-    per (application, dataset) into ``staging_path(spark, sf_dir,
-    prefix)``. A (re)build first drops every feed-derived checkpoint
-    of this application and dataset dir: a checkpoint would take a
-    restaged feed's files for new input on top of the old state."""
+    """The "stream_feed" front ``prefix``: the host-shared copy
+    ``shared_copy(sf_dir, prefix, write)``. A (re)build first drops
+    every feed-derived checkpoint of this application and dataset dir:
+    a checkpoint would take a restaged feed's files for new input on
+    top of the old state."""
 
     def build() -> str:
-        path = staging_path(spark, sf_dir, prefix)
         _drop_dirs(spark, sf_dir, _FEED_DERIVED_DIRS)
-        write(path)
-        return path
+        return shared_copy(sf_dir, prefix, write)
 
     return front(spark, sf_dir, "stream_feed", build, prefix)
 
@@ -407,12 +405,9 @@ def stream_ingest_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed_aic.py:146-155, replayed as an unbounded table), filtered and
     aggregated per type. Ingest → filter → enrich → aggregate, all on
     the stream."""
-    import shutil
-
     from ..sources.sinks import append_jsonl
 
     def write(path: str) -> None:
-        shutil.rmtree(path, ignore_errors=True)
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "ts_us"
         )
@@ -498,8 +493,8 @@ def snk_stream_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle; the date partition column is also what a downstream batch
     reader prunes on."""
     in_path = _prepare_input(spark, sf_dir)
-    out = staging_path(spark, sf_dir, "stream_sink")
-    ck = staging_path(spark, sf_dir, "stream_sink_ck")
+    out = app_dir(spark, sf_dir, "stream_sink")
+    ck = app_dir(spark, sf_dir, "stream_sink_ck")
     ev = (
         _read_stream(spark, in_path)
         .where("event_type = 'purchase'")
@@ -696,7 +691,7 @@ def _prepare_docs_input(spark: SparkSession, sf_dir: str) -> str:
     """The 'new batch' documents (doc_id % 10 = 0 — the same slice
     `dedup_incremental_lsh` uses) staged as a multi-file parquet dir
     for the file stream source — the "stream_docs" feed, written once
-    per (session, dataset); 4 files so availableNow +
+    per (host, dataset); 4 files so availableNow +
     maxFilesPerTrigger genuinely exercises multiple micro-batches."""
 
     def write(path: str) -> None:
@@ -740,8 +735,8 @@ def stream_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx_name = _lsh_index_table(spark, sf_dir)
     in_path = _prepare_docs_input(spark, sf_dir)
-    out = staging_path(spark, sf_dir, "stream_lshdedup")
-    ck = staging_path(spark, sf_dir, "stream_lshdedup_ck")
+    out = app_dir(spark, sf_dir, "stream_lshdedup")
+    ck = app_dir(spark, sf_dir, "stream_lshdedup_ck")
 
     def _match_batch(batch: DataFrame, batch_id: int) -> None:
         sess = batch.sparkSession
@@ -807,8 +802,8 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(batch + touched-state), never O(history). The exact oracle is
     the batch argmax over the whole event table."""
     in_path = _prepare_input(spark, sf_dir)
-    state_root = staging_path(spark, sf_dir, "upsert")
-    ck = staging_path(spark, sf_dir, "upsert_ck")
+    state_root = app_dir(spark, sf_dir, "upsert")
+    ck = app_dir(spark, sf_dir, "upsert_ck")
     latest: dict[str, str | None] = {"path": None}
 
     def _newest(df: DataFrame) -> DataFrame:
@@ -901,8 +896,8 @@ def stream_cdc_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys). Oracle: per-user newest event where that newest is not a
     tombstone."""
     in_path = _prepare_input(spark, sf_dir)
-    state_root = staging_path(spark, sf_dir, "cdc")
-    ck = staging_path(spark, sf_dir, "cdc_ck")
+    state_root = app_dir(spark, sf_dir, "cdc")
+    ck = app_dir(spark, sf_dir, "cdc_ck")
     latest: dict[str, str | None] = {"path": None}
 
     def _newest(df: DataFrame) -> DataFrame:

@@ -1,7 +1,7 @@
 """Regression guard for the one staged-front store: plan code keeps no
 cache of its own and builds no staging path by hand. Every front goes
 through ``functions.session_cache.front`` and every staging path
-through ``session_cache.staging_path``."""
+through ``session_cache.shared_copy`` or ``session_cache.app_dir``."""
 
 from __future__ import annotations
 
@@ -104,3 +104,48 @@ def test_no_staging_path_recipe_outside_the_store(rel, tree):
             continue
         names = {n.id for a in node.args for n in ast.walk(a) if isinstance(n, ast.Name)}
         assert "sf_dir" not in names, f"{rel}:{node.lineno}: md5(sf_dir...) path recipe"
+
+
+_TEMPFILE_CALLS = {
+    "gettempdir",
+    "gettempdirb",
+    "mkdtemp",
+    "mkstemp",
+    "mktemp",
+    "TemporaryDirectory",
+    "TemporaryFile",
+    "NamedTemporaryFile",
+    "SpooledTemporaryFile",
+}
+
+
+def _warehouse_calls(tree) -> set[int]:
+    """ids of the calls nested in ``.config("spark.sql.warehouse.dir", ...)``."""
+    out = set()
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == "spark.sql.warehouse.dir"
+        ):
+            out |= {id(n) for a in node.args[1:] for n in ast.walk(a)}
+    return out
+
+
+@pytest.mark.parametrize("rel, tree", MODULES, ids=[m[0] for m in MODULES])
+def test_no_tempfile_call_outside_the_store(rel, tree):
+    """Only ``session_cache`` places files in the temp dir; the one
+    exemption is the warehouse dir in ``session.py``."""
+    if rel == STORE:
+        return
+    exempt = _warehouse_calls(tree) if rel == "session.py" else set()
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call) or id(node) in exempt:
+            continue
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        on_module = isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name) and f.value.id == "tempfile"
+        assert name not in _TEMPFILE_CALLS and not on_module, (
+            f"{rel}:{node.lineno}: temp-dir call outside session_cache"
+        )

@@ -140,9 +140,10 @@ def test_vacuum_clone_preserves_pristine_source(spark):
     the pristine landing still holds every day partition (so the next
     run's clone starts complete), while the vacuum target has the
     expired days physically removed."""
-    import hashlib
-    import tempfile
-
+    from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
+        app_dir,
+        shared_copy,
+    )
     from pe_firm_investment_database_pipeline_spark.plans.io_ops import (
         _RETAIN_DAYS,
         snk_retention_vacuum,
@@ -150,15 +151,12 @@ def test_vacuum_clone_preserves_pristine_source(spark):
 
     sf = "/root/testdata/sf0.001"
     row = snk_retention_vacuum(spark, sf).collect()[0]
-    h = hashlib.md5(sf.encode()).hexdigest()[:10]
-    app = spark.sparkContext.applicationId.replace(":", "_").replace("/", "_")
-    tmp = tempfile.gettempdir()
 
-    def days(prefix):
-        root = os.path.join(tmp, f"{prefix}_{h}_{app}")
+    def days(root):
         return {d for d in os.listdir(root) if d.startswith("day=")}
 
-    pristine, target = days("pe_vacsrc"), days("pe_vacuum")
+    pristine = days(shared_copy(sf, "vacsrc", lambda p: pytest.fail("vacsrc not staged")))
+    target = days(app_dir(spark, sf, "vacuum"))
     assert len(pristine) == row["days_before"]
     assert len(target) == row["days_after"]
     assert target < pristine  # expired days removed from the clone only

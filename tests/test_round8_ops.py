@@ -1872,10 +1872,11 @@ def test_snk_txn_log_snapshot_isolation(spark, sf_dir):
     manifest returns the pre-delete, pre-append contents; v2 shows
     the append and the copy-on-write delete; the physical tree holds
     BOTH file generations."""
-    import glob
     import os
-    import tempfile
 
+    from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
+        app_dir,
+    )
     from pe_firm_investment_database_pipeline_spark.sources.tables import (
         load_table,
     )
@@ -1897,20 +1898,9 @@ def test_snk_txn_log_snapshot_isolation(spark, sf_dir):
     assert rows[2]["n_f_rows"] == o.where(
         (F.col("o_orderkey") % 10 == 0) & (F.col("o_orderstatus") == "F")
     ).count()
-    # THIS session's tree (other live sessions may own siblings —
-    # the sweep only reaps trees idle >1h, never concurrent ones)
-    app = spark.sparkContext.applicationId.replace(":", "_").replace(
-        "/", "_"
-    )
-    roots = [
-        p
-        for p in glob.glob(
-            os.path.join(tempfile.gettempdir(), "pe_txnlog_*")
-        )
-        if p.endswith(app)
-    ]
-    assert len(roots) == 1
-    names = set(os.listdir(roots[0]))
+    # THIS application's tree (other live applications own their own
+    # roots, which the sweep never removes)
+    names = set(os.listdir(app_dir(spark, sf_dir, "txnlog")))
     # both generations of A coexist — that's what isolation costs
     assert {"data_a", "data_a2", "data_b"} <= names
     assert {"manifest_v1.json", "manifest_v2.json"} <= names
@@ -2197,8 +2187,10 @@ def test_src_codec_matrix_identical_logical_contents(spark, sf_dir):
     (i.e. three distinct codecs actually landed)."""
     import glob
     import os
-    import tempfile
 
+    from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
+        app_dir,
+    )
     from pe_firm_investment_database_pipeline_spark.sources.tables import (
         load_table,
     )
@@ -2212,22 +2204,13 @@ def test_src_codec_matrix_identical_logical_contents(spark, sf_dir):
     assert len(vals) == 1
     n = load_table(spark, sf_dir, "documents").count()
     assert rows[0]["n_rows"] == n
-    app = spark.sparkContext.applicationId.replace(":", "_").replace(
-        "/", "_"
-    )
-    roots = [
-        p
-        for p in glob.glob(
-            os.path.join(tempfile.gettempdir(), "pe_codec_*")
-        )
-        if p.endswith(app)
-    ]
-    assert len(roots) == 1  # this session's tree
+    root = app_dir(spark, sf_dir, "codec")  # this application's tree
+    assert os.path.isdir(root)
     sizes = {}
     for codec in ("snappy", "gzip", "zstd"):
         sizes[codec] = sum(
             os.path.getsize(p)
-            for p in glob.glob(os.path.join(roots[0], codec, "*.parquet"))
+            for p in glob.glob(os.path.join(root, codec, "*.parquet"))
         )
     assert len(set(sizes.values())) >= 2  # codecs actually differ
     assert min(sizes.values()) > 0

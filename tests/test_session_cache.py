@@ -2,7 +2,8 @@
 (pe_firm_investment_database_pipeline_spark/functions/session_cache.py):
 locked double-checked memoization, dataset-fingerprint re-keying, the
 stale-application sweep, eviction by name and by owner, and the
-staging-path recipe. The unit tests need no SparkSession (sessions
+staging-path lifecycle (host-shared copies, lock-guarded application
+roots, the sweep). The unit tests need no SparkSession (sessions
 and frames are stand-in objects; ``front`` is type-agnostic); the
 tests at the end run real entries at sf0.001."""
 
@@ -10,6 +11,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import subprocess
 import threading
 from types import SimpleNamespace
 
@@ -189,16 +191,174 @@ def test_evict_owner_drops_only_owned_fronts(tmp_path):
     sc.evict_named("fam")
 
 
-def test_staging_path_recipe():
+def _dataset(path) -> str:
+    os.makedirs(path)
+    with open(os.path.join(path, "t.parquet"), "wb") as f:
+        f.write(b"v1")
+    return str(path)
+
+
+def test_staging_path_recipe(tmp_path, monkeypatch):
     import hashlib
     import tempfile
 
-    h = hashlib.md5(b"/data/sf1").hexdigest()[:10]
-    tmp = tempfile.gettempdir()
-    assert sc.staging_path(None, "/data/sf1", "dpp") == os.path.join(tmp, f"pe_dpp_{h}")
-    assert sc.staging_path(_session("local-1:x/y"), "/data/sf1", "frag") == (
-        os.path.join(tmp, f"pe_frag_{h}_local-1_x_y")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = _dataset(tmp_path / "sf1")
+    h = hashlib.md5(sf.encode()).hexdigest()[:10]
+    mtime_ns, nbytes = sc.dataset_fingerprint(sf)
+    root = os.path.join(str(tmp_path), f"pe_data_{h}_{mtime_ns}_{nbytes}")
+    assert sc.shared_copy(sf, "dpp", os.makedirs) == os.path.join(root, "dpp")
+    with open(os.path.join(root, "source")) as f:
+        assert f.read() == sf
+    assert sc.app_dir(_session("local-1:x/y"), sf, "frag") == (
+        os.path.join(str(tmp_path), "pe_app_local-1_x_y", f"frag_{h}")
     )
+
+
+def test_shared_copy_publishes_once_and_never_serves_a_tmp_tree(tmp_path, monkeypatch):
+    """``write`` fills this pid's ``<copy>.tmp<pid>`` once per dataset; a
+    crashed writer's tree (another pid's, or this process's own from
+    before) is never the published copy, and the loser of a rename race
+    keeps the winner's copy."""
+    import tempfile
+    from pathlib import Path
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = _dataset(tmp_path / "sf")
+    root = Path(sc.shared_copy(sf, "probe", os.makedirs)).parent
+    dst, own, other = root / "t", root / f"t.tmp{os.getpid()}", root / "t.tmp99999999"
+    for crashed in (own, other):
+        crashed.mkdir()
+        (crashed / "part").write_text("crashed")
+    calls = []
+
+    def write(p):
+        calls.append(p)
+        os.makedirs(p)
+        (Path(p) / "part").write_text("published")
+
+    assert sc.shared_copy(sf, "t", write) == str(dst)
+    assert sc.shared_copy(sf, "t", write) == str(dst)
+    assert calls == [str(own)]
+    assert (dst / "part").read_text() == "published"
+    assert not own.exists()
+    assert (other / "part").read_text() == "crashed"
+
+    won = root / "raced"
+
+    def lose(p):
+        os.makedirs(p)
+        (Path(p) / "part").write_text("loser")
+        won.mkdir()
+        (won / "part").write_text("winner")
+
+    assert sc.shared_copy(sf, "raced", lose) == str(won)
+    assert (won / "part").read_text() == "winner"
+    assert not (root / f"raced.tmp{os.getpid()}").exists()
+
+
+def test_app_dir_is_never_shared_between_applications(tmp_path, monkeypatch):
+    """Two live applications get distinct roots for the same prefix
+    and dataset, so a mutable fixture (the dynamic-overwrite table, a
+    checkpoint) is never written by both."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    a = sc.app_dir(_session("app-a"), str(tmp_path), "dynpart")
+    b = sc.app_dir(_session("app-b"), str(tmp_path), "dynpart")
+    assert a != b
+    assert os.path.dirname(a) != os.path.dirname(b)
+    assert sc.app_dir(_session("app-a"), str(tmp_path), "dynpart") == a
+    # each root survives the sweep the other's creation ran
+    assert os.path.isdir(os.path.dirname(a)) and os.path.isdir(os.path.dirname(b))
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _python(tmp, *lines: str) -> dict:
+    """Popen/run arguments of a Python process with ``tmp`` as its temp
+    dir, ``session_cache`` as ``sc`` and ``N`` to build a fake session."""
+    import sys
+
+    code = "\n".join(
+        (
+            "import os, sys, tempfile, time",
+            "from types import SimpleNamespace as N",
+            f"tempfile.tempdir = {str(tmp)!r}",
+            "from pe_firm_investment_database_pipeline_spark.functions import session_cache as sc",
+            *lines,
+        )
+    )
+    return dict(
+        args=[sys.executable, "-c", code],
+        cwd=_REPO,
+        env={**os.environ, "PYTHONPATH": _REPO},
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+
+
+def test_sweep_keeps_a_locked_root_and_removes_it_once_its_process_dies(tmp_path, monkeypatch):
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    proc = subprocess.Popen(
+        **_python(
+            tmp_path,
+            f"print(sc.app_dir(N(sparkContext=N(applicationId='held')), {str(tmp_path)!r}, 'x'), flush=True)",
+            "time.sleep(600)",
+        )
+    )
+    held = tmp_path / "pe_app_held"
+    try:
+        assert proc.stdout.readline().startswith(str(held / "x_"))
+        sc.app_dir(_session("sweeper-1"), str(tmp_path), "x")
+        assert held.is_dir()
+    finally:
+        proc.kill()
+        proc.wait(timeout=60)
+        proc.stdout.close()
+    sc.app_dir(_session("sweeper-2"), str(tmp_path), "x")
+    assert not held.exists()
+    assert (tmp_path / "pe_app_sweeper-1").is_dir()
+
+
+def test_exit_sweep_drops_the_old_copy_of_a_dataset_the_process_rewrote(tmp_path):
+    sf = _dataset(tmp_path / "sf")
+    done = subprocess.run(
+        **_python(
+            tmp_path,
+            f"sc.app_dir(N(sparkContext=N(applicationId='exiting')), {sf!r}, 'x')",
+            f"print(sc.shared_copy({sf!r}, 'c', os.makedirs))",
+            f"open({sf!r} + '/t.parquet', 'wb').write(b'v2-longer')",
+        ),
+        timeout=120,
+        check=True,
+    )
+    old = done.stdout.strip()
+    assert old.startswith(str(tmp_path / "pe_data_"))
+    assert not os.path.exists(os.path.dirname(old))
+    assert (tmp_path / "pe_app_exiting").is_dir()  # unlocked: the next process removes it
+
+
+def test_sweep_drops_shared_copies_of_gone_or_rewritten_datasets(tmp_path, monkeypatch):
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    kept, gone, rewritten = (_dataset(tmp_path / n) for n in ("kept", "gone", "rewritten"))
+    copies = {d: os.path.dirname(sc.shared_copy(d, "c", os.makedirs)) for d in (kept, gone, rewritten)}
+    shutil.rmtree(gone)
+    (tmp_path / "rewritten" / "t.parquet").write_bytes(b"v2-longer")
+    old_layout = tmp / "pe_split4_orders_1_2_0123456789"
+    old_layout.mkdir()
+    sc.app_dir(_session("sweeper"), kept, "x")
+    assert os.path.isdir(copies[kept])
+    assert not os.path.exists(copies[gone])
+    assert not os.path.exists(copies[rewritten])
+    assert old_layout.is_dir()
 
 
 # --- real entries ----------------------------------------------------------

@@ -120,18 +120,20 @@ def test_compaction_reduces_file_count(spark):
     staging dir holds many files per day partition, the compacted dir
     exactly one — with identical content (the entry's oracle checks
     content; this pins the file layout)."""
-    import hashlib
     import os
-    import tempfile
 
+    import pytest
+
+    from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
+        app_dir,
+        shared_copy,
+    )
     from pe_firm_investment_database_pipeline_spark.plans.io_ops import (
         snk_compact_files,
     )
 
     sf = "/root/testdata/sf0.001"
     snk_compact_files(spark, sf).collect()
-    h = hashlib.md5(sf.encode()).hexdigest()[:10]
-    app = spark.sparkContext.applicationId.replace(":", "_").replace("/", "_")
 
     def day_file_counts(root):
         out = {}
@@ -144,11 +146,9 @@ def test_compaction_reduces_file_count(spark):
         return out
 
     frag = day_file_counts(
-        os.path.join(tempfile.gettempdir(), f"pe_frag_{h}_{app}")
+        shared_copy(sf, "frag", lambda p: pytest.fail("frag not staged"))
     )
-    comp = day_file_counts(
-        os.path.join(tempfile.gettempdir(), f"pe_compact_{h}_{app}")
-    )
+    comp = day_file_counts(app_dir(spark, sf, "compact"))
     assert set(frag) == set(comp) and frag
     assert all(n == 1 for n in comp.values()), comp
     assert sum(frag.values()) > sum(comp.values())
@@ -161,13 +161,12 @@ def test_zorder_prunes_2d(spark):
     the Z-ordered layout skips most of them — the point of
     bit-interleaved clustering: partial pruning power in every
     interleaved dimension instead of full power in exactly one."""
-    import hashlib
-    import os
-    import tempfile
-
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
+        app_dir,
+    )
     from pe_firm_investment_database_pipeline_spark.plans.io_ops import (
         _Z_BITS,
         snk_zorder_layout,
@@ -178,13 +177,11 @@ def test_zorder_prunes_2d(spark):
 
     sf = "/root/testdata/sf0.01"
     snk_zorder_layout(spark, sf).collect()  # writes the z layout
-    h = hashlib.md5(sf.encode()).hexdigest()[:10]
-    app = spark.sparkContext.applicationId.replace(":", "_").replace("/", "_")
-    zdir = os.path.join(tempfile.gettempdir(), f"pe_zorder_{h}_{app}")
+    zdir = app_dir(spark, sf, "zorder")
 
     # contrast layout: identical rows/columns, range-sorted by the
     # user coordinate only
-    udir = os.path.join(tempfile.gettempdir(), f"pe_usersort_{h}_{app}")
+    udir = app_dir(spark, sf, "usersort")
     (
         spark.read.parquet(zdir)
         .repartitionByRange(8, "ubits")

@@ -232,7 +232,7 @@ def test_stream_parquet_sink_exactly_once(spark):
     files, so the read-back aggregate is identical — and the output
     directory is physically partitioned by the epoch-day column."""
     from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
-        staging_path,
+        app_dir,
     )
     from pe_firm_investment_database_pipeline_spark.streaming import windows as SW
 
@@ -246,7 +246,7 @@ def test_stream_parquet_sink_exactly_once(spark):
         for r in SW.snk_stream_parquet(spark, sf).collect()
     }
     assert r1 and r1 == r2
-    out = staging_path(spark, sf, "stream_sink")
+    out = app_dir(spark, sf, "stream_sink")
     assert any(d.startswith("day=") for d in os.listdir(out))
 
 
@@ -258,7 +258,7 @@ def test_stream_dedup_lsh_multibatch_and_idempotent(spark):
     exactly, and (c) be idempotent under re-run with the same
     checkpoint (exactly-once sink: no duplicated pairs)."""
     from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
-        staging_path,
+        app_dir,
     )
     from pe_firm_investment_database_pipeline_spark.plans import textops
     from pe_firm_investment_database_pipeline_spark.streaming import windows as SW
@@ -274,7 +274,7 @@ def test_stream_dedup_lsh_multibatch_and_idempotent(spark):
     }
     assert streamed == batch and streamed
     # multiple micro-batches: the checkpoint's offset log has >1 entry
-    ck = staging_path(spark, sf, "stream_lshdedup_ck")
+    ck = app_dir(spark, sf, "stream_lshdedup_ck")
     offsets = [f for f in os.listdir(os.path.join(ck, "offsets")) if f.isdigit()]
     assert len(offsets) > 1, f"expected >1 micro-batch, got {sorted(offsets)}"
     # idempotent re-run: same checkpoint, nothing new processed

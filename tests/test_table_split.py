@@ -5,15 +5,14 @@ files and read from that copy with the schema Spark inferred from the
 original, so a warm ``load_table`` launches no Spark job and its scan
 needs no round-robin exchange. These tests pin what that may never
 change: the rows a table serves, the read of the original file where
-no copy is needed, and that a rewritten dataset or a half-written copy
-is never served.
+no copy is needed, and that a rewritten dataset is never served (a
+half-written copy is ``test_session_cache``'s shared-copy case).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import duckdb
 import pyarrow.compute as pc
@@ -21,10 +20,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from __spark_entry__ import SF0001
-from pe_firm_investment_database_pipeline_spark.functions.session_cache import (
-    dataset_fingerprint,
-    staging_path,
-)
+from pe_firm_investment_database_pipeline_spark.functions import session_cache
 from pe_firm_investment_database_pipeline_spark.sources import tables
 from pe_firm_investment_database_pipeline_spark.sources.tables import load_table
 from tools.driver_sim import check
@@ -115,25 +111,6 @@ def test_rewritten_dataset_stages_a_new_copy(spark, tmp_path):
     assert all(os.path.isdir(d) for d in old)
 
 
-def test_leftover_tmp_tree_is_never_read(spark, tmp_path):
-    """A crashed writer's ``<copy>.tmp<pid>`` (another pid's, or this
-    process's own from before) holds the wrong rows; the served table
-    must be the original's."""
-    sf = _copy_dataset(tmp_path / "sf")
-    n = spark.sparkContext.defaultParallelism
-    mtime_ns, nbytes = dataset_fingerprint(sf)
-    dst = staging_path(None, os.path.abspath(sf), f"split{n}_orders_{mtime_ns}_{nbytes}")
-    src = pq.read_table(os.path.join(sf, "orders.parquet"))
-    for pid in (99999999, os.getpid()):
-        os.makedirs(f"{dst}.tmp{pid}")
-        pq.write_table(src.slice(0, 3), f"{dst}.tmp{pid}/part-00000.parquet")
-    df = load_table(spark, sf, "orders")
-    assert _files(df) == {dst}
-    assert df.count() == src.num_rows
-    assert not os.path.exists(f"{dst}.tmp{os.getpid()}")
-    shutil.rmtree(f"{dst}.tmp99999999")
-
-
 def test_enough_splits_reads_the_original(spark, tmp_path, monkeypatch):
     """With at least ``defaultParallelism`` splits (here: a split size
     of one byte) nothing is staged and every read is the original
@@ -146,5 +123,5 @@ def test_enough_splits_reads_the_original(spark, tmp_path, monkeypatch):
         df = load_table(spark, sf, name)
         assert _files(df) == {sf}
         assert df.count() == _duck_rows(f"SELECT count(*) FROM '{sf}/{name}.parquet'")[0][0]
-    tag = staging_path(None, os.path.abspath(sf), "split").rsplit("_", 1)[1]
-    assert not [p for p in os.listdir(tempfile.gettempdir()) if p.startswith("pe_split") and tag in p]
+    root = os.path.dirname(session_cache.shared_copy(sf, "probe", os.makedirs))
+    assert not [p for p in os.listdir(root) if p.startswith("split")]
